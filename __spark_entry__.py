@@ -2,15 +2,18 @@
 
 ``queries()`` exposes every implemented operator family from SURVEY.md §2
 as a (spark, sf_dir) → DataFrame callable over the driver's parquet tables;
-``oracle_sql()`` gives the DuckDB-equivalent SQL for each SQL-expressible
-one (same column names, same rounding). Non-SQL-expressible operators
-(MinHash-LSH, SimHash, hyperplane ANN, Arrow multimodal plumbing, the raw
-.warc.gz pipeline) are present as rows-only checks and are covered
-byte-for-byte by the pytest oracle suite instead.
+``oracle_sql()`` gives the DuckDB-equivalent SQL for each one (same column
+names, same rounding). Kernels with no SQL form (MinHash, SimHash, CDC, ...)
+get their oracle from an independent per-row reference materialized to
+parquet (warcsum_spark/oracle_refs.py).
+
+Both, and ``bench.HEADLINE``, are derived from ``CATALOGUE`` at the end of
+this file: one row per query, so a new query is one catalogue row.
 """
 
 from __future__ import annotations
 
+import inspect
 import os
 from collections.abc import Callable
 
@@ -18,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 SF0001 = "/root/testdata/sf0.001"
+#: the scale factor the driver checks oracles at (a sibling of SF0001)
+SF001 = os.path.join(os.path.dirname(SF0001), "sf0.01")
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -85,6 +90,11 @@ def _tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # warcsum core semantics over the documents table
 # ---------------------------------------------------------------------------
+
+ORACLE_DIGEST_MANIFEST = (
+    "SELECT doc_id, source AS warcfile, n_chars AS length, md5(text) AS digest FROM documents"
+)
+
 
 def q_doc_digest_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1/P8: digest manifest shape over documents (md5 of text bytes)."""
@@ -516,7 +526,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return learn_bpe(docs, n_merges=25)
 
 
-def _oracle_bpe(sf_dir: str = "/root/testdata/sf0.01", n_merges: int = 25) -> str:
+def _oracle_bpe(sf_dir: str, n_merges: int = 25) -> str:
     from warcsum_spark.oracle_refs import materialize_bpe_oracle
 
     path = materialize_bpe_oracle(sf_dir, n_merges=n_merges)
@@ -670,7 +680,7 @@ def q_minhash_lsh_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_minhash_lsh(
-    sf_dir: str = "/root/testdata/sf0.01",
+    sf_dir: str,
     num_hashes: int = 64,
     k: int = 3,
     bands: int = 16,
@@ -729,7 +739,7 @@ def q_cross_batch_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_cross_batch(
-    sf_dir: str = "/root/testdata/sf0.01",
+    sf_dir: str,
     num_hashes: int = 64,
     threshold: float = 0.5,
 ) -> str:
@@ -777,7 +787,7 @@ def q_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_simhash(
-    sf_dir: str = "/root/testdata/sf0.01", max_hamming: int = 3
+    sf_dir: str, max_hamming: int = 3
 ) -> str:
     """DuckDB replica of simhash_near_pairs over the independent
     reference's per-doc simhashes; brute-force pair scan (fine at oracle
@@ -1737,7 +1747,7 @@ SELECT doc_a, doc_b, cosine FROM scored WHERE cosine >= {threshold}
 
 
 def _oracle_ann_ivf(
-    sf_dir: str = "/root/testdata/sf0.01",
+    sf_dir: str,
     n_centroids: int = 16,
     n_probe: int = 6,
     train_size: int = 4096,
@@ -1930,7 +1940,7 @@ def _semdedup_k(n_rows: int) -> int:
 
 
 def _oracle_semdedup(
-    sf_dir: str = "/root/testdata/sf0.01",
+    sf_dir: str,
     n_centroids: int | None = None,
     threshold: float = 0.95,
 ) -> str | None:
@@ -3020,7 +3030,7 @@ def q_entropy_docs_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_entropy_bytes(sf_dir: str = "/root/testdata/sf0.01") -> str:
+def _oracle_entropy_bytes(sf_dir: str) -> str:
     from warcsum_spark.oracle_refs import materialize_byte_entropy_oracle
 
     path = materialize_byte_entropy_oracle(sf_dir)
@@ -4294,7 +4304,7 @@ def q_dsir_scores_xx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_dsir_xx(sf_dir: str = "/root/testdata/sf0.01") -> str:
+def _oracle_dsir_xx(sf_dir: str) -> str:
     from warcsum_spark.oracle_refs import materialize_dsir_xx_oracle
 
     path = materialize_dsir_xx_oracle(sf_dir, n_buckets=512)
@@ -5566,7 +5576,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_ann_pq(
-    sf_dir: str = "/root/testdata/sf0.01",
+    sf_dir: str,
     m: int = 4,
     k: int = 16,
     train_size: int = 4096,
@@ -5880,7 +5890,7 @@ def q_bbit_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_bbit(sf_dir: str = "/root/testdata/sf0.01") -> str:
+def _oracle_bbit(sf_dir: str) -> str:
     from warcsum_spark.operators.bbit import bbit_oracle_sql
     from warcsum_spark.oracle_refs import materialize_minhash_oracle
 
@@ -5911,7 +5921,7 @@ def q_edit_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_edit_verified(sf_dir: str = "/root/testdata/sf0.01") -> str:
+def _oracle_edit_verified(sf_dir: str) -> str:
     from warcsum_spark.operators.editdist import edit_verified_oracle_sql
     from warcsum_spark.oracle_refs import materialize_minhash_oracle
 
@@ -6004,7 +6014,7 @@ def q_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kleinberg_bursts(ev, s=2.0, gamma=1.0)
 
 
-def _oracle_bursts(sf_dir: str = "/root/testdata/sf0.01") -> str:
+def _oracle_bursts(sf_dir: str) -> str:
     from warcsum_spark.operators.bursts import burst_oracle_sql
     from warcsum_spark.oracle_refs import materialize_burst_oracle
 
@@ -6070,7 +6080,7 @@ def q_cdc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_cdc(sf_dir: str = "/root/testdata/sf0.01") -> str:
+def _oracle_cdc(sf_dir: str) -> str:
     from warcsum_spark.oracle_refs import materialize_cdc_oracle
 
     path = materialize_cdc_oracle(
@@ -6115,175 +6125,6 @@ def _oracle_powerlaw() -> str:
         "FROM events",
         xmin=2,
     )
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Ordered so the driver's first-50 correctness window carries the
-    entries that most need a fresh hard-signal row: the two flagships,
-    then the 43 operators registered in rounds 3-late/4 that rounds 1–4
-    never sampled (the window checked dict positions 1–50 each round),
-    then the round-4 red row (inverted_index, fixed this round), the new
-    entropy_docs_bytes tier, one flagship re-check (training_pipeline),
-    and two round-5 dedup-tier queries (line_dedup_docs, c4_clean_docs).
-    The long-proven round-1/2 queries (green in CORRECTNESS_r01–r04)
-    rotate to the back; tools/check_oracle.py still gates ALL entries."""
-    return {
-        # flagships
-        "doc_digest_manifest": q_doc_digest_manifest,
-        "doc_dedup_extended": q_doc_dedup_extended,
-        # rounds 3-late/4 — never inside the driver window before
-        "tag_topics_docs": q_tag_topics_docs,
-        "normalize_docs": q_normalize_docs,
-        "permute_docs": q_permute_docs,
-        "lpa_communities": q_lpa_communities,
-        "cross_batch_dedup": q_cross_batch_dedup,
-        "charset_sniff_docs": q_charset_sniff_docs,
-        "length_quantiles": q_length_quantiles,
-        "triangle_counts": q_triangle_counts,
-        "entropy_docs": q_entropy_docs,
-        "url_templates": q_url_templates,
-        "embedding_drift": q_embedding_drift,
-        "anchor_text": q_anchor_text,
-        "recrawl_schedule": q_recrawl_schedule,
-        "host_budgets": q_host_budgets,
-        "cdx_index": q_cdx_index,
-        "crawl_traps": q_crawl_traps,
-        "lm_perplexity": q_lm_perplexity,
-        "dsir_scores": q_dsir_scores,
-        "host_graph": q_host_graph,
-        "host_url_cardinality": q_host_url_cardinality,
-        "registrable_domains": q_registrable_domains,
-        "dust_rules": q_dust_rules,
-        "wat_metadata": q_wat_metadata,
-        "cms_heavy_hitters": q_cms_heavy_hitters,
-        "cc_star_chains": q_cc_star_chains,
-        "span_dedup_docs": q_span_dedup_docs,
-        "simjoin_docs": q_simjoin_docs,
-        "bpe_merges": q_bpe_merges,
-        "redirect_resolution": q_redirect_resolution,
-        "containment_docs": q_containment_docs,
-        "semdedup_docs": q_semdedup_docs,
-        "bm25_search": q_bm25_search,
-        "hop_distance": q_hop_distance,
-        "revisit_rehydrate": q_revisit_rehydrate,
-        "dsir_scores_xx": q_dsir_scores_xx,
-        "temperature_mix": q_temperature_mix,
-        "domain_gate": q_domain_gate,
-        "mime_sniff": q_mime_sniff,
-        "fetch_times": q_fetch_times,
-        "pack_sequences": q_pack_sequences,
-        "cluster_split": q_cluster_split,
-        "ccnet_buckets": q_ccnet_buckets,
-        "trustrank_links": q_trustrank_links,
-        # round-4 red row (driver canonicalizer), postings now stringified
-        "inverted_index": q_inverted_index,
-        # new this round — the T66 Arrow scale tier as engine default
-        "entropy_docs_bytes": q_entropy_docs_bytes,
-        # flagship re-check (guards this round's edits)
-        "training_pipeline": q_training_pipeline,
-        # round-5 dedup/cleaning tier — never driver-checked; takes the two
-        # slots freed by rotating the r4-green minhash_lsh_docs /
-        # frontier_schedule re-checks behind the boundary (both stay under
-        # the stricter local exact-compare gate)
-        "line_dedup_docs": q_line_dedup_docs,
-        "c4_clean_docs": q_c4_clean_docs,
-        # ---- driver window boundary (first 50 above) ----
-        "minhash_lsh_docs": q_minhash_lsh_docs,
-        "frontier_schedule": q_frontier_schedule,
-        # long-proven: green in CORRECTNESS_r01–r04 driver runs
-        "pricing_agg": q_pricing_agg,
-        "window_events": q_window_events,
-        "join_segments": q_join_segments,
-        "topk_per_user": q_topk_per_user,
-        "filter_orders": q_filter_orders,
-        "customers_without_orders": q_customers_without_orders,
-        "rollup_events": q_rollup_events,
-        "exact_dedup_docs": q_exact_dedup_docs,
-        "ngram_jaccard": q_ngram_jaccard,
-        "dedup_clusters": q_dedup_clusters,
-        "hash_split": q_hash_split,
-        "top_ngrams": q_top_ngrams,
-        "simhash_docs": q_simhash_docs,
-        "text_stats": q_text_stats,
-        "ann_bruteforce": q_ann_bruteforce,
-        "ann_lsh": q_ann_lsh,
-        "ann_ivf": q_ann_ivf,
-        "embedding_near_dup": q_embedding_near_dup,
-        "url_seen_gate": q_url_seen_gate,
-        "blocklist_gate": q_blocklist_gate,
-        "asof_join_events": q_asof_join_events,
-        "range_join_events": q_range_join_events,
-        "domain_mix_docs": q_domain_mix_docs,
-        "pack_shards_docs": q_pack_shards_docs,
-        "sitemap_seed": q_sitemap_seed,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "classify_quality_docs": q_classify_quality_docs,
-        "script_profile_docs": q_script_profile_docs,
-        "chunk_docs": q_chunk_docs,
-        "stats_by_lang": q_stats_by_lang,
-        "multimodal_features": q_multimodal_features,
-        "sessionize_events": q_sessionize_events,
-        "html_extract": q_html_extract,
-        "pii_redact": q_pii_redact,
-        "link_extract": q_link_extract,
-        "quality_filter_docs": q_quality_filter_docs,
-        "repetition_signals": q_repetition_signals,
-        "para_dedup_docs": q_para_dedup_docs,
-        "decontaminate_docs": q_decontaminate_docs,
-        "boilerplate_docs": q_boilerplate_docs,
-        "stratified_sample_docs": q_stratified_sample_docs,
-        "pagerank_links": q_pagerank_links,
-        "hits_links": q_hits_links,
-        "snapshot_diff_docs": q_snapshot_diff_docs,
-        # round-5 additions (after the window: local gate + pytest carry
-        # their evidence; the window stays reserved for the 43 backfills)
-        "rep_optout_gate": q_rep_optout_gate,
-        "pmi_collocations": q_pmi_collocations,
-        "priority_sample_docs": q_priority_sample,
-        "k_core_links": q_k_core,
-        "harmonic_centrality": q_harmonic_centrality,
-        "bpe_encode_docs": q_bpe_encode_docs,
-        "knlm_bigrams": q_knlm_bigrams,
-        "readability_docs": q_readability_docs,
-        "corpus_laws": q_corpus_laws,
-        "rrf_fusion": q_rrf_fusion,
-        "postings_compression": q_postings_compression,
-        "docid_remap": q_docid_remap,
-        "kmv_overlap": q_kmv_overlap,
-        "assortativity": q_assortativity,
-        "change_rate_mle": q_change_rate,
-        "host_concentration": q_host_concentration,
-        "rp_distortion": q_rp_distortion,
-        "cocitation": q_cocitation,
-        "opic_importance": q_opic,
-        "bowtie_decomposition": q_bowtie,
-        "categorical_drift": q_categorical_drift,
-        "mirror_hosts": q_mirror_hosts,
-        "unimax_budgets": q_unimax_budgets,
-        "effective_diameter": q_effective_diameter,
-        "ann_pq": q_ann_pq,
-        "modularity_links": q_modularity,
-        "freshness_policy": q_freshness_policy,
-        "wand_bounds": q_wand_bounds,
-        "tokenizer_fertility": q_tokenizer_fertility,
-        "salsa_links": q_salsa,
-        "moore_lewis_select": q_moore_lewis,
-        "katz_links": q_katz,
-        "qlm_search": q_qlm_search,
-        "bbit_minhash_docs": q_bbit_minhash,
-        "cdc_dedup_docs": q_cdc_dedup,
-        "indegree_powerlaw": q_powerlaw,
-        "edit_verified_docs": q_edit_verified,
-        "url_spam_hosts": q_url_spam,
-        "host_bursts": q_bursts,
-        "spam_mass_links": q_spam_mass,
-        "crawl_ordering": q_crawl_ordering,
-        "imatch_docs": q_imatch,
-        "spotsig_dups": q_spotsigs,
-        "sgt_smoothing": q_good_turing,
-        "textrank_keywords": q_textrank,
-        "dedup_tier_agreement": q_cluster_agreement,
-    }
 
 
 def q_spotsigs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6635,199 +6476,213 @@ FROM r WHERE rank <= 100
 """
 
 
+# ---------------------------------------------------------------------------
+# query catalogue
+# ---------------------------------------------------------------------------
+
+#: the driver's parquet tables (TESTDATA.md)
+TABLES = [
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+]
+
+#: Every query, one row each: ``(name, builder, oracle, table)``.
+#:
+#: - Row order is ``queries()`` order. The driver checks the first 50
+#:   entries, so the window carries the entries that most need a fresh
+#:   hard-signal row; long-proven queries rotate to the back
+#:   (tools/check_oracle.py still gates every entry).
+#: - ``oracle`` is the DuckDB SQL, or an ``_oracle_*`` helper that builds
+#:   it. Helpers taking ``sf_dir`` are data-dependent (materialized
+#:   references, trained quantizers) and are rebuilt per scale factor;
+#:   a ``None`` result leaves the query rows-only at that scale factor.
+#: - ``table`` is the query's primary input table (the rows/sec
+#:   denominator of ``bench.py --scale-suite``); ``None`` keeps the query
+#:   out of the headline suite (``bench.HEADLINE``).
+CATALOGUE = [
+    # flagships
+    ("doc_digest_manifest", q_doc_digest_manifest, ORACLE_DIGEST_MANIFEST, "documents"),
+    ("doc_dedup_extended", q_doc_dedup_extended, ORACLE_DOC_DEDUP, "documents"),
+    # rounds 3-late/4 — never inside the driver window before
+    ("tag_topics_docs", q_tag_topics_docs, _oracle_tagging, "documents"),
+    ("normalize_docs", q_normalize_docs, _oracle_normalize, "documents"),
+    ("permute_docs", q_permute_docs, _oracle_permute, "documents"),
+    ("lpa_communities", q_lpa_communities, _oracle_lpa, "events"),
+    ("cross_batch_dedup", q_cross_batch_dedup, _oracle_cross_batch, "documents"),
+    ("charset_sniff_docs", q_charset_sniff_docs, _oracle_charset, "documents"),
+    ("length_quantiles", q_length_quantiles, _oracle_length_quantiles, "documents"),
+    ("triangle_counts", q_triangle_counts, _oracle_triangles, "events"),
+    ("entropy_docs", q_entropy_docs, _oracle_entropy, "documents"),
+    ("url_templates", q_url_templates, _oracle_url_templates, "events"),
+    ("embedding_drift", q_embedding_drift, _oracle_embedding_drift, "embeddings"),
+    ("anchor_text", q_anchor_text, _oracle_anchor_text, "documents"),
+    ("recrawl_schedule", q_recrawl_schedule, ORACLE_RECRAWL, "events"),
+    ("host_budgets", q_host_budgets, ORACLE_HOST_BUDGETS, "events"),
+    ("cdx_index", q_cdx_index, ORACLE_CDX, "documents"),
+    ("crawl_traps", q_crawl_traps, ORACLE_CRAWL_TRAPS, "events"),
+    ("lm_perplexity", q_lm_perplexity, ORACLE_LM_PERPLEXITY, "documents"),
+    ("dsir_scores", q_dsir_scores, ORACLE_DSIR, "documents"),
+    ("host_graph", q_host_graph, ORACLE_HOST_GRAPH, "events"),
+    ("host_url_cardinality", q_host_url_cardinality, _oracle_host_url_cardinality, "events"),
+    ("registrable_domains", q_registrable_domains, _oracle_registrable_domains, "events"),
+    ("dust_rules", q_dust_rules, _oracle_dust_rules, "events"),
+    ("wat_metadata", q_wat_metadata, ORACLE_WAT_METADATA, None),
+    ("cms_heavy_hitters", q_cms_heavy_hitters, _oracle_cms_heavy_hitters, None),
+    ("cc_star_chains", q_cc_star_chains, ORACLE_CC_STAR_CHAINS, None),
+    ("span_dedup_docs", q_span_dedup_docs, _oracle_span_dedup, "documents"),
+    ("simjoin_docs", q_simjoin_docs, ORACLE_NGRAM_JACCARD, "documents"),
+    # bpe_merges and cluster_split (same connected-components round
+    # profile) stay out of the headline suite: their sequential rounds
+    # measure per-round fixed overhead (~0.55 s/round at any small sf),
+    # not data throughput. Both stay oracle-gated and amortize with
+    # corpus size like the frontier superstep (BENCH/BASELINE.md §scaling).
+    ("bpe_merges", q_bpe_merges, _oracle_bpe, None),
+    ("redirect_resolution", q_redirect_resolution, ORACLE_REDIRECTS, "documents"),
+    ("containment_docs", q_containment_docs, ORACLE_CONTAINMENT, "documents"),
+    ("semdedup_docs", q_semdedup_docs, _oracle_semdedup, "embeddings"),
+    ("bm25_search", q_bm25_search, _oracle_bm25, "documents"),
+    ("hop_distance", q_hop_distance, ORACLE_HOP_DISTANCE, "events"),
+    ("revisit_rehydrate", q_revisit_rehydrate, ORACLE_REVISIT_REHYDRATE, "documents"),
+    ("dsir_scores_xx", q_dsir_scores_xx, _oracle_dsir_xx, "documents"),
+    ("temperature_mix", q_temperature_mix, _oracle_temperature_mix, "documents"),
+    ("domain_gate", q_domain_gate, ORACLE_DOMAIN_GATE, "documents"),
+    ("mime_sniff", q_mime_sniff, _oracle_mime_sniff, "documents"),
+    ("fetch_times", q_fetch_times, _oracle_fetch_times, "events"),
+    ("pack_sequences", q_pack_sequences, _oracle_pack_sequences, "documents"),
+    ("cluster_split", q_cluster_split, _oracle_cluster_split, None),
+    ("ccnet_buckets", q_ccnet_buckets, ORACLE_CCNET_BUCKETS, "documents"),
+    ("trustrank_links", q_trustrank_links, _oracle_trustrank, None),
+    # round-4 red row (driver canonicalizer), postings now stringified
+    ("inverted_index", q_inverted_index, ORACLE_INVERTED_INDEX, "documents"),
+    # the T66 Arrow scale tier as engine default
+    ("entropy_docs_bytes", q_entropy_docs_bytes, _oracle_entropy_bytes, "documents"),
+    # flagship re-check
+    ("training_pipeline", q_training_pipeline, _oracle_training_pipeline, "documents"),
+    # round-5 dedup/cleaning tier — never driver-checked; takes the two
+    # slots freed by rotating the r4-green minhash_lsh_docs /
+    # frontier_schedule re-checks behind the boundary (both stay under
+    # the stricter local exact-compare gate)
+    ("line_dedup_docs", q_line_dedup_docs, _oracle_line_dedup, "documents"),
+    ("c4_clean_docs", q_c4_clean_docs, _oracle_c4_clean, "documents"),
+    # ---- driver window boundary (first 50 above) ----
+    ("minhash_lsh_docs", q_minhash_lsh_docs, _oracle_minhash_lsh, "documents"),
+    ("frontier_schedule", q_frontier_schedule, ORACLE_FRONTIER_SCHEDULE, "events"),
+    # long-proven: green in CORRECTNESS_r01–r04 driver runs
+    ("pricing_agg", q_pricing_agg, ORACLE_PRICING, "lineitem"),
+    ("window_events", q_window_events, ORACLE_WINDOW_EVENTS, "events"),
+    ("join_segments", q_join_segments, ORACLE_JOIN_SEGMENTS, "orders"),
+    ("topk_per_user", q_topk_per_user, ORACLE_TOPK, "events"),
+    ("filter_orders", q_filter_orders, ORACLE_FILTER_ORDERS, None),
+    ("customers_without_orders", q_customers_without_orders, ORACLE_NO_ORDERS, None),
+    ("rollup_events", q_rollup_events, ORACLE_ROLLUP, None),
+    ("exact_dedup_docs", q_exact_dedup_docs, ORACLE_EXACT_DEDUP, "documents"),
+    ("ngram_jaccard", q_ngram_jaccard, ORACLE_NGRAM_JACCARD, None),
+    ("dedup_clusters", q_dedup_clusters, ORACLE_DEDUP_CLUSTERS, None),
+    ("hash_split", q_hash_split, _oracle_hash_split, None),
+    ("top_ngrams", q_top_ngrams, ORACLE_TOP_NGRAMS, None),
+    ("simhash_docs", q_simhash_docs, _oracle_simhash, None),
+    ("text_stats", q_text_stats, _oracle_text_stats, "documents"),
+    ("ann_bruteforce", q_ann_bruteforce, ORACLE_ANN_BRUTE, "embeddings"),
+    ("ann_lsh", q_ann_lsh, _oracle_ann_lsh, None),
+    ("ann_ivf", q_ann_ivf, _oracle_ann_ivf, None),
+    ("embedding_near_dup", q_embedding_near_dup, _oracle_embedding_near_dup, None),
+    ("url_seen_gate", q_url_seen_gate, ORACLE_URL_SEEN, "events"),
+    ("blocklist_gate", q_blocklist_gate, ORACLE_BLOCKLIST, None),
+    ("asof_join_events", q_asof_join_events, ORACLE_ASOF, None),
+    ("range_join_events", q_range_join_events, ORACLE_RANGE_JOIN, None),
+    ("domain_mix_docs", q_domain_mix_docs, _oracle_domain_mix, None),
+    ("pack_shards_docs", q_pack_shards_docs, ORACLE_PACK_SHARDS, None),
+    ("sitemap_seed", q_sitemap_seed, ORACLE_SITEMAP, None),
+    ("tfidf_top_terms", q_tfidf_top_terms, _oracle_tfidf, None),
+    ("classify_quality_docs", q_classify_quality_docs, _oracle_classify, None),
+    ("script_profile_docs", q_script_profile_docs, _oracle_script_profile, None),
+    ("chunk_docs", q_chunk_docs, _oracle_chunk, None),
+    ("stats_by_lang", q_stats_by_lang, ORACLE_STATS_BY_LANG, None),
+    ("multimodal_features", q_multimodal_features, ORACLE_MULTIMODAL, None),
+    ("sessionize_events", q_sessionize_events, ORACLE_SESSIONS, None),
+    ("html_extract", q_html_extract, _oracle_html_extract, None),
+    ("pii_redact", q_pii_redact, _oracle_pii_redact, None),
+    ("link_extract", q_link_extract, ORACLE_LINK_EXTRACT, None),
+    ("quality_filter_docs", q_quality_filter_docs, _oracle_quality_filter, None),
+    ("repetition_signals", q_repetition_signals, _oracle_repetition, "documents"),
+    ("para_dedup_docs", q_para_dedup_docs, _oracle_para_dedup, "documents"),
+    ("decontaminate_docs", q_decontaminate_docs, ORACLE_DECONTAMINATE, None),
+    ("boilerplate_docs", q_boilerplate_docs, _oracle_boilerplate, "documents"),
+    ("stratified_sample_docs", q_stratified_sample_docs, _oracle_stratified, "documents"),
+    ("pagerank_links", q_pagerank_links, _oracle_pagerank, "events"),
+    ("hits_links", q_hits_links, _oracle_hits, "events"),
+    ("snapshot_diff_docs", q_snapshot_diff_docs, ORACLE_SNAPSHOT_DIFF, "documents"),
+    # round-5 additions (after the window: local gate + pytest carry
+    # their evidence; the window stays reserved for the 43 backfills)
+    ("rep_optout_gate", q_rep_optout_gate, _oracle_rep_optout, "documents"),
+    ("pmi_collocations", q_pmi_collocations, _oracle_pmi, "documents"),
+    ("priority_sample_docs", q_priority_sample, _oracle_priority_sample, "documents"),
+    ("k_core_links", q_k_core, _oracle_k_core, "events"),
+    ("harmonic_centrality", q_harmonic_centrality, _oracle_harmonic, "events"),
+    ("bpe_encode_docs", q_bpe_encode_docs, _oracle_bpe_encode, "documents"),
+    ("knlm_bigrams", q_knlm_bigrams, _oracle_knlm, "documents"),
+    ("readability_docs", q_readability_docs, _oracle_readability, "documents"),
+    ("corpus_laws", q_corpus_laws, _oracle_corpus_laws, "documents"),
+    ("rrf_fusion", q_rrf_fusion, _oracle_rrf, "documents"),
+    ("postings_compression", q_postings_compression, _oracle_postings, "documents"),
+    ("docid_remap", q_docid_remap, _oracle_docid_remap, "documents"),
+    ("kmv_overlap", q_kmv_overlap, _oracle_kmv, "documents"),
+    ("assortativity", q_assortativity, _oracle_assortativity, "events"),
+    ("change_rate_mle", q_change_rate, _oracle_change_rate, "events"),
+    ("host_concentration", q_host_concentration, _oracle_host_concentration, "documents"),
+    ("rp_distortion", q_rp_distortion, _oracle_rproj, "embeddings"),
+    ("cocitation", q_cocitation, _oracle_cocitation, "events"),
+    ("opic_importance", q_opic, _oracle_opic, "events"),
+    ("bowtie_decomposition", q_bowtie, _oracle_bowtie, "events"),
+    ("categorical_drift", q_categorical_drift, _oracle_categorical_drift, "documents"),
+    ("mirror_hosts", q_mirror_hosts, _oracle_mirror_hosts, "documents"),
+    ("unimax_budgets", q_unimax_budgets, _oracle_unimax, "documents"),
+    ("effective_diameter", q_effective_diameter, _oracle_effective_diameter, "events"),
+    ("ann_pq", q_ann_pq, _oracle_ann_pq, "embeddings"),
+    ("modularity_links", q_modularity, _oracle_modularity, "events"),
+    ("freshness_policy", q_freshness_policy, _oracle_freshness, "events"),
+    ("wand_bounds", q_wand_bounds, _oracle_wand, "documents"),
+    ("tokenizer_fertility", q_tokenizer_fertility, _oracle_tokenizer_fertility, "documents"),
+    ("salsa_links", q_salsa, _oracle_salsa, "events"),
+    ("moore_lewis_select", q_moore_lewis, _oracle_moore_lewis, "documents"),
+    ("katz_links", q_katz, _oracle_katz, "events"),
+    ("qlm_search", q_qlm_search, _oracle_qlm, "documents"),
+    ("bbit_minhash_docs", q_bbit_minhash, _oracle_bbit, "documents"),
+    ("cdc_dedup_docs", q_cdc_dedup, _oracle_cdc, "documents"),
+    ("indegree_powerlaw", q_powerlaw, _oracle_powerlaw, "events"),
+    ("edit_verified_docs", q_edit_verified, _oracle_edit_verified, "documents"),
+    ("url_spam_hosts", q_url_spam, _oracle_url_spam, "events"),
+    ("host_bursts", q_bursts, _oracle_bursts, "events"),
+    ("spam_mass_links", q_spam_mass, _oracle_spam_mass, "events"),
+    ("crawl_ordering", q_crawl_ordering, _oracle_crawl_ordering, "events"),
+    ("imatch_docs", q_imatch, _oracle_imatch, "documents"),
+    ("spotsig_dups", q_spotsigs, _oracle_spotsigs, "documents"),
+    ("sgt_smoothing", q_good_turing, _oracle_good_turing, "documents"),
+    ("textrank_keywords", q_textrank, _oracle_textrank, "documents"),
+    ("dedup_tier_agreement", q_cluster_agreement, _oracle_cluster_agreement, "documents"),
+]
 
 
-
-def oracle_sql() -> dict[str, str]:
-    out = {
-        "doc_digest_manifest": (
-            "SELECT doc_id, source AS warcfile, n_chars AS length, md5(text) AS digest FROM documents"
-        ),
-        "doc_dedup_extended": ORACLE_DOC_DEDUP,
-        "pricing_agg": ORACLE_PRICING,
-        "window_events": ORACLE_WINDOW_EVENTS,
-        "join_segments": ORACLE_JOIN_SEGMENTS,
-        "topk_per_user": ORACLE_TOPK,
-        "filter_orders": ORACLE_FILTER_ORDERS,
-        "customers_without_orders": ORACLE_NO_ORDERS,
-        "rollup_events": ORACLE_ROLLUP,
-        "exact_dedup_docs": ORACLE_EXACT_DEDUP,
-        "ngram_jaccard": ORACLE_NGRAM_JACCARD,
-        "dedup_clusters": ORACLE_DEDUP_CLUSTERS,
-        "hash_split": _oracle_hash_split(),
-        "top_ngrams": ORACLE_TOP_NGRAMS,
-        "text_stats": _oracle_text_stats(),
-        "ann_bruteforce": ORACLE_ANN_BRUTE,
-        "ann_lsh": _oracle_ann_lsh(),
-        "embedding_near_dup": _oracle_embedding_near_dup(),
-        "frontier_schedule": ORACLE_FRONTIER_SCHEDULE,
-        "url_seen_gate": ORACLE_URL_SEEN,
-        "blocklist_gate": ORACLE_BLOCKLIST,
-        "asof_join_events": ORACLE_ASOF,
-        "range_join_events": ORACLE_RANGE_JOIN,
-        "domain_mix_docs": _oracle_domain_mix(),
-        "pack_shards_docs": ORACLE_PACK_SHARDS,
-        "sitemap_seed": ORACLE_SITEMAP,
-        "tfidf_top_terms": _oracle_tfidf(),
-        "classify_quality_docs": _oracle_classify(),
-        "script_profile_docs": _oracle_script_profile(),
-        "chunk_docs": _oracle_chunk(),
-        "training_pipeline": _oracle_training_pipeline(),
-        "stats_by_lang": ORACLE_STATS_BY_LANG,
-        "sessionize_events": ORACLE_SESSIONS,
-        "html_extract": _oracle_html_extract(),
-        "pii_redact": _oracle_pii_redact(),
-        "multimodal_features": ORACLE_MULTIMODAL,
-        "link_extract": ORACLE_LINK_EXTRACT,
-        # minhash/simhash: the wrapping-uint64 kernels have no HUGEINT SQL
-        # form, so the independent per-row Python references are
-        # materialized to parquet and only the pair logic runs in SQL.
-        "minhash_lsh_docs": _oracle_minhash_lsh(),
-        "cross_batch_dedup": _oracle_cross_batch(),
-        "simhash_docs": _oracle_simhash(),
-        "quality_filter_docs": _oracle_quality_filter(),
-        "repetition_signals": _oracle_repetition(),
-        "para_dedup_docs": _oracle_para_dedup(),
-        "decontaminate_docs": ORACLE_DECONTAMINATE,
-        "boilerplate_docs": _oracle_boilerplate(),
-        "inverted_index": ORACLE_INVERTED_INDEX,
-        "stratified_sample_docs": _oracle_stratified(),
-        "pagerank_links": _oracle_pagerank(),
-        "hits_links": _oracle_hits(),
-        "snapshot_diff_docs": ORACLE_SNAPSHOT_DIFF,
-        "tag_topics_docs": _oracle_tagging(),
-        "normalize_docs": _oracle_normalize(),
-        "permute_docs": _oracle_permute(),
-        "lpa_communities": _oracle_lpa(),
-        "charset_sniff_docs": _oracle_charset(),
-        "length_quantiles": _oracle_length_quantiles(),
-        "triangle_counts": _oracle_triangles(),
-        "entropy_docs": _oracle_entropy(),
-        "entropy_docs_bytes": _oracle_entropy_bytes(),
-        "url_templates": _oracle_url_templates(),
-        "embedding_drift": _oracle_embedding_drift(),
-        "anchor_text": _oracle_anchor_text(),
-        "recrawl_schedule": ORACLE_RECRAWL,
-        "host_budgets": ORACLE_HOST_BUDGETS,
-        "cdx_index": ORACLE_CDX,
-        "crawl_traps": ORACLE_CRAWL_TRAPS,
-        "lm_perplexity": ORACLE_LM_PERPLEXITY,
-        "dsir_scores": ORACLE_DSIR,
-        "host_graph": ORACLE_HOST_GRAPH,
-        "host_url_cardinality": _oracle_host_url_cardinality(),
-        "registrable_domains": _oracle_registrable_domains(),
-        "dust_rules": _oracle_dust_rules(),
-        "wat_metadata": ORACLE_WAT_METADATA,
-        "cms_heavy_hitters": _oracle_cms_heavy_hitters(),
-        "cc_star_chains": ORACLE_CC_STAR_CHAINS,
-        "span_dedup_docs": _oracle_span_dedup(),
-        "simjoin_docs": ORACLE_NGRAM_JACCARD,
-        "bpe_merges": _oracle_bpe(),
-        "redirect_resolution": ORACLE_REDIRECTS,
-        "containment_docs": ORACLE_CONTAINMENT,
-        "bm25_search": _oracle_bm25(),
-        "hop_distance": ORACLE_HOP_DISTANCE,
-        "revisit_rehydrate": ORACLE_REVISIT_REHYDRATE,
-        "dsir_scores_xx": _oracle_dsir_xx(),
-        "temperature_mix": _oracle_temperature_mix(),
-        "domain_gate": ORACLE_DOMAIN_GATE,
-        "mime_sniff": _oracle_mime_sniff(),
-        "fetch_times": _oracle_fetch_times(),
-        "pack_sequences": _oracle_pack_sequences(),
-        "cluster_split": _oracle_cluster_split(),
-        "ccnet_buckets": ORACLE_CCNET_BUCKETS,
-        "trustrank_links": _oracle_trustrank(),
-        "rep_optout_gate": _oracle_rep_optout(),
-        "line_dedup_docs": _oracle_line_dedup(),
-        "c4_clean_docs": _oracle_c4_clean(),
-        "pmi_collocations": _oracle_pmi(),
-        "priority_sample_docs": _oracle_priority_sample(),
-        "k_core_links": _oracle_k_core(),
-        "harmonic_centrality": _oracle_harmonic(),
-        "bpe_encode_docs": _oracle_bpe_encode(),
-        "knlm_bigrams": _oracle_knlm(),
-        "readability_docs": _oracle_readability(),
-        "corpus_laws": _oracle_corpus_laws(),
-        "rrf_fusion": _oracle_rrf(),
-        "postings_compression": _oracle_postings(),
-        "docid_remap": _oracle_docid_remap(),
-        "kmv_overlap": _oracle_kmv(),
-        "assortativity": _oracle_assortativity(),
-        "change_rate_mle": _oracle_change_rate(),
-        "host_concentration": _oracle_host_concentration(),
-        "rp_distortion": _oracle_rproj(),
-        "cocitation": _oracle_cocitation(),
-        "opic_importance": _oracle_opic(),
-        "bowtie_decomposition": _oracle_bowtie(),
-        "categorical_drift": _oracle_categorical_drift(),
-        "mirror_hosts": _oracle_mirror_hosts(),
-        "unimax_budgets": _oracle_unimax(),
-        "effective_diameter": _oracle_effective_diameter(),
-        "modularity_links": _oracle_modularity(),
-        "freshness_policy": _oracle_freshness(),
-        "wand_bounds": _oracle_wand(),
-        "tokenizer_fertility": _oracle_tokenizer_fertility(),
-        "salsa_links": _oracle_salsa(),
-        "moore_lewis_select": _oracle_moore_lewis(),
-        "katz_links": _oracle_katz(),
-        "qlm_search": _oracle_qlm(),
-        "bbit_minhash_docs": _oracle_bbit(),
-        "cdc_dedup_docs": _oracle_cdc(),
-        "indegree_powerlaw": _oracle_powerlaw(),
-        "edit_verified_docs": _oracle_edit_verified(),
-        "url_spam_hosts": _oracle_url_spam(),
-        "host_bursts": _oracle_bursts(),
-        "spam_mass_links": _oracle_spam_mass(),
-        "crawl_ordering": _oracle_crawl_ordering(),
-        "imatch_docs": _oracle_imatch(),
-        "spotsig_dups": _oracle_spotsigs(),
-        "sgt_smoothing": _oracle_good_turing(),
-        "textrank_keywords": _oracle_textrank(),
-        "dedup_tier_agreement": _oracle_cluster_agreement(),
-    }
-    ivf = _oracle_ann_ivf()
-    if ivf is not None:
-        out["ann_ivf"] = ivf
-    apq = _oracle_ann_pq()
-    if apq is not None:
-        out["ann_pq"] = apq
-    sem = _oracle_semdedup()
-    if sem is not None:
-        out["semdedup_docs"] = sem
-    return out
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {name: builder for name, builder, _, _ in CATALOGUE}
 
 
 def oracle_sql_for(sf_dir: str) -> dict[str, str]:
-    """``oracle_sql()`` with data-dependent oracles regenerated for
-    ``sf_dir``. The driver always checks at sf0.01 (what ``oracle_sql()``
-    bakes in); local tools running at another scale factor must use this,
-    because the IVF oracle inlines a quantizer TRAINED on the target
-    data — sf0.01 centroids against sf0.1 tables is a guaranteed
-    spurious mismatch."""
-    out = dict(oracle_sql())
-    ivf = _oracle_ann_ivf(sf_dir)
-    if ivf is not None:
-        out["ann_ivf"] = ivf
-    else:
-        out.pop("ann_ivf", None)
-    apq = _oracle_ann_pq(sf_dir)
-    if apq is not None:
-        out["ann_pq"] = apq
-    else:
-        out.pop("ann_pq", None)
-    sem = _oracle_semdedup(sf_dir)
-    if sem is not None:
-        out["semdedup_docs"] = sem
-    else:
-        out.pop("semdedup_docs", None)
-    out["minhash_lsh_docs"] = _oracle_minhash_lsh(sf_dir)
-    out["cross_batch_dedup"] = _oracle_cross_batch(sf_dir)
-    out["simhash_docs"] = _oracle_simhash(sf_dir)
-    out["bpe_merges"] = _oracle_bpe(sf_dir)
-    out["dsir_scores_xx"] = _oracle_dsir_xx(sf_dir)
-    out["entropy_docs_bytes"] = _oracle_entropy_bytes(sf_dir)
-    out["bbit_minhash_docs"] = _oracle_bbit(sf_dir)
-    out["cdc_dedup_docs"] = _oracle_cdc(sf_dir)
-    out["edit_verified_docs"] = _oracle_edit_verified(sf_dir)
-    out["host_bursts"] = _oracle_bursts(sf_dir)
+    """DuckDB SQL per query, with the data-dependent oracles built for
+    ``sf_dir``. Local tools running at another scale factor must use
+    this: the IVF oracle inlines a quantizer TRAINED on the target data,
+    and sf0.01 centroids against sf0.1 tables is a guaranteed spurious
+    mismatch."""
+    out = {}
+    for name, _, oracle, _ in CATALOGUE:
+        if callable(oracle):
+            takes_sf = "sf_dir" in inspect.signature(oracle).parameters
+            oracle = oracle(sf_dir) if takes_sf else oracle()
+        if oracle is not None:
+            out[name] = oracle
     return out
+
+
+def oracle_sql() -> dict[str, str]:
+    """The oracles at the scale factor the driver checks (sf0.01)."""
+    return oracle_sql_for(SF001)

@@ -27,128 +27,14 @@ import pandas as pd  # module-level: pandas_udf type hints resolve via globals
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from warcsum_spark.session import default_cores, get_spark  # noqa: E402
 
-HEADLINE = [
-    "doc_digest_manifest",
-    "doc_dedup_extended",
-    "pricing_agg",
-    "window_events",
-    "join_segments",
-    "topk_per_user",
-    "exact_dedup_docs",
-    "minhash_lsh_docs",
-    "text_stats",
-    "ann_bruteforce",
-    "frontier_schedule",
-    "url_seen_gate",
-    # round 3 additions — kept at the END so per-query deltas vs earlier
-    # rounds stay comparable; the suite total grows by their cost
-    "para_dedup_docs",
-    "repetition_signals",
-    "training_pipeline",
-    # round 4 additions — appended for the same delta-comparability reason
-    "boilerplate_docs",
-    "inverted_index",
-    "stratified_sample_docs",
-    "pagerank_links",
-    "anchor_text",
-    "recrawl_schedule",
-    "host_budgets",
-    "cdx_index",
-    "crawl_traps",
-    "lm_perplexity",
-    "dsir_scores",
-    "host_graph",
-    "host_url_cardinality",
-    "registrable_domains",
-    "dust_rules",
-    "span_dedup_docs",
-    "simjoin_docs",
-    "containment_docs",
-    "redirect_resolution",
-    "semdedup_docs",
-    "hits_links",
-    "snapshot_diff_docs",
-    "tag_topics_docs",
-    "normalize_docs",
-    "permute_docs",
-    "lpa_communities",
-    "cross_batch_dedup",
-    "charset_sniff_docs",
-    "length_quantiles",
-    "triangle_counts",
-    "entropy_docs",
-    "url_templates",
-    "embedding_drift",
-    "bm25_search",
-    "hop_distance",
-    "revisit_rehydrate",
-    "dsir_scores_xx",
-    "temperature_mix",
-    "domain_gate",
-    "mime_sniff",
-    "fetch_times",
-    "pack_sequences",
-    "ccnet_buckets",
-    # round 5 additions — appended for the same delta-comparability reason
-    "entropy_docs_bytes",
-    "rep_optout_gate",
-    "line_dedup_docs",
-    "c4_clean_docs",
-    "pmi_collocations",
-    "priority_sample_docs",
-    "k_core_links",
-    "harmonic_centrality",
-    "bpe_encode_docs",
-    "knlm_bigrams",
-    "readability_docs",
-    "corpus_laws",
-    "rrf_fusion",
-    "postings_compression",
-    "docid_remap",
-    "kmv_overlap",
-    "assortativity",
-    "change_rate_mle",
-    "host_concentration",
-    "rp_distortion",
-    "cocitation",
-    "opic_importance",
-    "bowtie_decomposition",
-    "categorical_drift",
-    # round-5 late additions (post tier-freeze; tiers re-run after)
-    "mirror_hosts",
-    "unimax_budgets",
-    "effective_diameter",
-    "ann_pq",
-    "modularity_links",
-    "freshness_policy",
-    "wand_bounds",
-    "tokenizer_fertility",
-    "salsa_links",
-    "moore_lewis_select",
-    "katz_links",
-    "qlm_search",
-    "bbit_minhash_docs",
-    "cdc_dedup_docs",
-    "indegree_powerlaw",
-    "edit_verified_docs",
-    "url_spam_hosts",
-    "host_bursts",
-    "spam_mass_links",
-    "crawl_ordering",
-    "imatch_docs",
-    "spotsig_dups",
-    "sgt_smoothing",
-    "textrank_keywords",
-    "dedup_tier_agreement",
-    # bpe_merges (and cluster_split, whose connected-components rounds
-    # have the same profile) is deliberately NOT here: 25 sequential
-    # argmax rounds
-    # measure per-round fixed overhead (~0.55 s/round at any small sf),
-    # not data throughput — it would read as a bogus suite regression.
-    # It stays correctness-gated (driver oracle) and amortizes with
-    # corpus size like the frontier superstep (BENCH/BASELINE.md §scaling).
-]
+#: headline query → its primary input table (the rows/sec denominator of
+#: --scale-suite), in catalogue order; see __spark_entry__.CATALOGUE
+QUERY_PRIMARY_TABLE = {
+    name: table for name, _, _, table in entry_mod.CATALOGUE if table is not None
+}
+HEADLINE = list(QUERY_PRIMARY_TABLE)
 
 
 def _force(df) -> None:
@@ -191,8 +77,6 @@ def run_suite(spark, sf_dir: str) -> dict[str, float]:
 
 
 def _session(cores: int | str, shuffle: int):
-    from warcsum_spark.session import get_spark
-
     # At bench scale the shuffled data is tens of MB; AQE's default 64 MB
     # advisory size would coalesce every shuffle to ~1 partition and
     # serialize the windows/joins. Size partitions to keep all cores busy —
@@ -207,7 +91,7 @@ def _session(cores: int | str, shuffle: int):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cores()
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
 
     if "--scaling" in sys.argv:
@@ -281,119 +165,6 @@ def main() -> None:
     spark.stop()
 
 
-# primary input table per headline query — the denominator of its
-# rows/sec in the data-scaling suite (--scale-suite)
-QUERY_PRIMARY_TABLE = {
-    "doc_digest_manifest": "documents",
-    "doc_dedup_extended": "documents",
-    "pricing_agg": "lineitem",
-    "window_events": "events",
-    "join_segments": "orders",
-    "topk_per_user": "events",
-    "exact_dedup_docs": "documents",
-    "minhash_lsh_docs": "documents",
-    "text_stats": "documents",
-    "ann_bruteforce": "embeddings",
-    "frontier_schedule": "events",
-    "url_seen_gate": "events",
-    "para_dedup_docs": "documents",
-    "repetition_signals": "documents",
-    "training_pipeline": "documents",
-    "boilerplate_docs": "documents",
-    "inverted_index": "documents",
-    "stratified_sample_docs": "documents",
-    "pagerank_links": "events",
-    "anchor_text": "documents",
-    "recrawl_schedule": "events",
-    "host_budgets": "events",
-    "cdx_index": "documents",
-    "crawl_traps": "events",
-    "lm_perplexity": "documents",
-    "dsir_scores": "documents",
-    "host_graph": "events",
-    "host_url_cardinality": "events",
-    "registrable_domains": "events",
-    "dust_rules": "events",
-    "span_dedup_docs": "documents",
-    "simjoin_docs": "documents",
-    "containment_docs": "documents",
-    "redirect_resolution": "documents",
-    "semdedup_docs": "embeddings",
-    "hits_links": "events",
-    "snapshot_diff_docs": "documents",
-    "tag_topics_docs": "documents",
-    "normalize_docs": "documents",
-    "permute_docs": "documents",
-    "lpa_communities": "events",
-    "cross_batch_dedup": "documents",
-    "charset_sniff_docs": "documents",
-    "length_quantiles": "documents",
-    "triangle_counts": "events",
-    "entropy_docs": "documents",
-    "url_templates": "events",
-    "embedding_drift": "embeddings",
-    "bm25_search": "documents",
-    "hop_distance": "events",
-    "revisit_rehydrate": "documents",
-    "dsir_scores_xx": "documents",
-    "temperature_mix": "documents",
-    "domain_gate": "documents",
-    "mime_sniff": "documents",
-    "fetch_times": "events",
-    "pack_sequences": "documents",
-    "ccnet_buckets": "documents",
-    "entropy_docs_bytes": "documents",
-    "rep_optout_gate": "documents",
-    "line_dedup_docs": "documents",
-    "c4_clean_docs": "documents",
-    "pmi_collocations": "documents",
-    "priority_sample_docs": "documents",
-    "k_core_links": "events",
-    "harmonic_centrality": "events",
-    "bpe_encode_docs": "documents",
-    "knlm_bigrams": "documents",
-    "readability_docs": "documents",
-    "corpus_laws": "documents",
-    "rrf_fusion": "documents",
-    "postings_compression": "documents",
-    "docid_remap": "documents",
-    "kmv_overlap": "documents",
-    "assortativity": "events",
-    "change_rate_mle": "events",
-    "host_concentration": "documents",
-    "rp_distortion": "embeddings",
-    "cocitation": "events",
-    "opic_importance": "events",
-    "bowtie_decomposition": "events",
-    "categorical_drift": "documents",
-    "mirror_hosts": "documents",
-    "unimax_budgets": "documents",
-    "effective_diameter": "events",
-    "ann_pq": "embeddings",
-    "modularity_links": "events",
-    "freshness_policy": "events",
-    "wand_bounds": "documents",
-    "tokenizer_fertility": "documents",
-    "salsa_links": "events",
-    "moore_lewis_select": "documents",
-    "katz_links": "events",
-    "qlm_search": "documents",
-    "bbit_minhash_docs": "documents",
-    "cdc_dedup_docs": "documents",
-    "indegree_powerlaw": "events",
-    "edit_verified_docs": "documents",
-    "url_spam_hosts": "events",
-    "host_bursts": "events",
-    "spam_mass_links": "events",
-    "crawl_ordering": "events",
-    "imatch_docs": "documents",
-    "spotsig_dups": "documents",
-    "sgt_smoothing": "documents",
-    "textrank_keywords": "documents",
-    "dedup_tier_agreement": "documents",
-}
-
-
 def _table_rows(sf_dir: str, table: str) -> int:
     """Row count from the parquet footer — no Spark job."""
     import pyarrow.parquet as pq
@@ -415,12 +186,6 @@ def run_scale_suite(base_dir: str, cpus: str) -> None:
     Writes BENCH/suite_scale.json and refreshes the marked section of
     BENCH/BASELINE.md; the default bench mode embeds the summary into
     its one-line JSON so BENCH_r{N}.json carries the evidence."""
-    missing = [n for n in HEADLINE if n not in QUERY_PRIMARY_TABLE]
-    if missing:
-        # fail BEFORE the multi-minute sweeps, not in the ratio math after
-        raise SystemExit(
-            f"HEADLINE queries missing a QUERY_PRIMARY_TABLE row: {missing}"
-        )
     repo = os.path.dirname(os.path.abspath(__file__))
     sys.path.insert(0, os.path.join(repo, "tools"))
     from gen_scale import generate_scaled

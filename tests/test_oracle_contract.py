@@ -12,11 +12,6 @@ import pytest
 
 import __spark_entry__ as entry_mod
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 
 def _norm(v):
     if isinstance(v, float):
@@ -36,7 +31,7 @@ def _canon(rows, cols):
 @pytest.fixture(scope="module")
 def duck(sf_dir):
     con = duckdb.connect()
-    for t in TABLES:
+    for t in entry_mod.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
@@ -80,3 +75,8 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
     assert df.columns == ["doc_id", "digest", "ext", "copy_no", "ref_doc_id"]
+
+
+def test_catalogue_tables_are_driver_tables():
+    tables = {table for *_, table in entry_mod.CATALOGUE if table is not None}
+    assert tables <= set(entry_mod.TABLES)

@@ -13,6 +13,9 @@ the INDEPENDENT implementation it must agree with:
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -97,3 +100,21 @@ def test_simhash_materializer_caches(sf_dir, tmp_path, monkeypatch):
     p2 = materialize_simhash_oracle(sf_dir)
     assert p2 == m1[0]
     assert __import__("os").stat(p2).st_mtime_ns == m1[1]  # cache hit, no rewrite
+
+
+def test_oracle_text_ignores_source_mtimes(sf_dir, tmp_path, monkeypatch):
+    """Reference caches are keyed on the source parquet's bytes, so a
+    copy of the tables whose files are only touched yields the same
+    oracle text (which embeds the cache paths)."""
+    import __spark_entry__ as entry_mod
+    import warcsum_spark.oracle_refs as orefs
+
+    monkeypatch.setattr(orefs, "CACHE_DIR", str(tmp_path / "cache"))
+    copy = tmp_path / os.path.basename(os.path.normpath(sf_dir))
+    copy.mkdir()
+    for name in os.listdir(sf_dir):
+        shutil.copyfile(os.path.join(sf_dir, name), copy / name)
+    before = entry_mod.oracle_sql_for(str(copy))
+    for name in os.listdir(copy):
+        os.utime(copy / name, (1_000_000_000, 1_000_000_000))
+    assert entry_mod.oracle_sql_for(str(copy)) == before

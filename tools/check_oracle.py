@@ -18,10 +18,7 @@ import duckdb  # noqa: E402
 import __spark_entry__ as entry_mod  # noqa: E402
 from warcsum_spark.session import get_spark  # noqa: E402
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+TABLES = entry_mod.TABLES  # re-exported for perfbench/queries.py
 
 
 def norm(v):

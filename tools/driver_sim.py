@@ -32,11 +32,6 @@ import pandas as pd  # noqa: E402
 import __spark_entry__ as em  # noqa: E402
 from warcsum_spark.session import get_spark  # noqa: E402
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 
 def canon(df: pd.DataFrame) -> list:
     cols = sorted(df.columns, key=str.lower)
@@ -66,12 +61,12 @@ def main() -> int:
     sf = argv[0] if argv else "/root/testdata/sf0.01"
     spark = get_spark(cores=16, shuffle_partitions=16)
     con = duckdb.connect()
-    for t in TABLES:
+    for t in em.TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
         )
     qs = em.queries()
-    osql = em.oracle_sql() if sf.endswith("sf0.01") else em.oracle_sql_for(sf)
+    osql = em.oracle_sql_for(sf)
     fails = []
     for name in list(qs)[:window]:
         try:

@@ -74,10 +74,7 @@ def main():
     import __spark_entry__ as em
     from warcsum_spark.session import get_spark
 
-    spark = get_spark(
-        cores=os.environ.get("SPARK_GRAFT_CPUS", "32"),
-        app_name="snapshot",
-    )
+    spark = get_spark(app_name="snapshot")
     out = {}
     if os.path.exists(out_path) and only:
         with open(out_path) as f:

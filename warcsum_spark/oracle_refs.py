@@ -23,6 +23,7 @@ query — the IVF-quantizer oracle regeneration precedent
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 
@@ -197,11 +198,15 @@ def _neardup_corpus(sf_dir: str) -> list[tuple[int, str | None]]:
     ]
     return rows
 
-def _cache_key(sf_dir: str, tag: str) -> str:
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
+def _cache_key(sf_dir: str, tag: str, table: str = "documents") -> str:
+    """Cache file stem for a reference built from ``sf_dir``'s ``table``:
+    keyed on the sha256 of the parquet's bytes, so a copied or touched
+    input with the same content reuses the entry (and keeps the oracle
+    text, which embeds the path, unchanged)."""
+    with open(os.path.join(sf_dir, f"{table}.parquet"), "rb") as f:
+        digest = hashlib.file_digest(f, "sha256").hexdigest()
     sf_name = os.path.basename(os.path.normpath(sf_dir))
-    return f"{tag}_{sf_name}_{st.st_size}_{int(st.st_mtime)}"
+    return f"{tag}_{sf_name}_{digest[:16]}"
 
 
 def materialize_minhash_oracle(
@@ -210,7 +215,7 @@ def materialize_minhash_oracle(
     """Run ref_minhash_doc over the near-dup corpus of ``sf_dir`` and write
     two exploded parquet files: (doc_id, pos, sig_val) and
     (doc_id, band_id, band_hash). Returns their paths. Cached on the
-    source parquet's (size, mtime) — deterministic regeneration."""
+    source parquet's content digest — deterministic regeneration."""
     os.makedirs(CACHE_DIR, exist_ok=True)
     key = _cache_key(sf_dir, f"minhash_{num_hashes}_{k}_{bands}")
     sig_path = os.path.join(CACHE_DIR, key + "_sig.parquet")
@@ -350,7 +355,7 @@ def materialize_dsir_xx_oracle(sf_dir: str, n_buckets: int = 512) -> str:
     recomputes the full estimator (histograms, smoothing, lw, per-doc
     aggregates) from these rows, so the hash chain and the Spark-side
     arithmetic are checked independently. Cached like the minhash
-    reference (source parquet size+mtime key)."""
+    reference (source parquet content-digest key)."""
     os.makedirs(CACHE_DIR, exist_ok=True)
     # tag v2: tokenization fixed to ASCII-whitespace (stale v1 caches
     # carry str.split() output — identical on ASCII fixtures, but
@@ -416,7 +421,7 @@ def materialize_byte_entropy_oracle(sf_dir: str) -> str:
     mirrored here. zlib level 6 is the *definition* of the ratio, so
     both paths share it. Writes (doc_id, byte_entropy, compress_ratio)
     parquet (nulls for null/empty text) and returns the path. Cached on
-    the source parquet's (size, mtime) like the minhash reference."""
+    the source parquet's content digest like the minhash reference."""
     import math
     import zlib
     from collections import Counter
@@ -476,8 +481,6 @@ def ref_cdc_doc(
     adds over flattened Arrow buffers and walks precomputed mask-hit
     lists; here nothing is vectorized, so offset/segment bugs in the
     kernel cannot be mirrored."""
-    import hashlib
-
     from warcsum_spark.operators.cdc import _GEAR, _masks
 
     if text is None:
@@ -524,7 +527,7 @@ def materialize_cdc_oracle(
 ) -> str:
     """Run ref_cdc_doc over the near-dup corpus of ``sf_dir`` and write
     one parquet of (doc_id, chunk_id, offset, length, chunk_hash).
-    Cached on the source parquet's (size, mtime) like the minhash
+    Cached on the source parquet's content digest like the minhash
     reference."""
     os.makedirs(CACHE_DIR, exist_ok=True)
     key = _cache_key(sf_dir, f"cdc_{min_size}_{normal_size}_{max_size}")
@@ -610,12 +613,10 @@ def materialize_burst_oracle(
     """Group events by host = 'u' || (user_id % n_hosts), run
     ref_burst_states per host, and write two parquet files:
     (host, idx, state) for every gap and (host, n_events, n_gaps)
-    for every host. Cached on events.parquet's (size, mtime)."""
+    for every host. Cached on events.parquet's content digest."""
     os.makedirs(CACHE_DIR, exist_ok=True)
     src = os.path.join(sf_dir, "events.parquet")
-    st_ = os.stat(src)
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    key = f"burst_{n_hosts}_{s!r}_{gamma!r}_{sf_name}_{st_.st_size}_{int(st_.st_mtime)}"
+    key = _cache_key(sf_dir, f"burst_{n_hosts}_{s!r}_{gamma!r}", table="events")
     states_path = os.path.join(CACHE_DIR, key + "_states.parquet")
     hosts_path = os.path.join(CACHE_DIR, key + "_hosts.parquet")
     if os.path.exists(states_path) and os.path.exists(hosts_path):

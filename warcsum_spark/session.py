@@ -107,6 +107,26 @@ def _local_dir() -> str:
     return os.path.join(base, f"pid-{os.getpid()}{suffix}")
 
 
+def default_cores() -> str:
+    """Local-mode core count: ``$SPARK_GRAFT_CPUS``, else every core."""
+    return os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap: ``$WARCSUM_DRIVER_MEM``, else half the host's
+    ``MemTotal``. In local mode the driver JVM runs every task, so a
+    fixed heap larger than the host lets it grow until the kernel's OOM
+    killer ends it; half leaves room for the Python workers."""
+    mem = os.environ.get("WARCSUM_DRIVER_MEM")
+    if mem:
+        return mem
+    with open(meminfo) as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return f"{int(line.split()[1]) // 2048}m"  # kB → MiB, halved
+    raise RuntimeError(f"no MemTotal in {meminfo}; set WARCSUM_DRIVER_MEM")
+
+
 def get_spark(
     cores: int | str | None = None,
     shuffle_partitions: int | None = None,
@@ -120,7 +140,7 @@ def get_spark(
     by Spark. ``shuffle_partitions`` defaults to the core count locally.
     """
     if cores is None:
-        cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cores = default_cores()
     master = f"local[{cores}]"
     if shuffle_partitions is None:
         try:
@@ -152,9 +172,7 @@ def get_spark(
             "spark.sql.execution.arrow.maxBytesPerBatch",
             ARROW_MAX_BYTES_PER_BATCH,
         )
-        # local mode = driver-only JVM; leave headroom for 32 threads of
-        # Tungsten pages + Arrow buffers.
-        .config("spark.driver.memory", os.environ.get("WARCSUM_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
         # local-mode shuffle spills to spark.local.dir; this box's disk
