@@ -66,10 +66,15 @@ def test_constructed_bowtie_classes(spark):
     assert {n for n, c in got.items() if c == "OTHER"} == {500, 501}
 
 
-def test_python_reference_twin_odd_graph(spark):
-    edges = [(i % 13, (i * i + 3) % 13) for i in range(40)] + [(50, 0)]
-    got = _run_tagged(spark, edges, max_hops=13, pivot=0)
-    assert got == _py_ref(edges, pivot=0, max_hops=13)
+@pytest.mark.parametrize("shift", [0, -20])
+def test_python_reference_twin_odd_graph(spark, shift):
+    # shift -20 makes ids negative: the backward-sweep copies must not
+    # fold into the forward sweep
+    edges = [
+        (i % 13 + shift, (i * i + 3) % 13 + shift) for i in range(40)
+    ] + [(50 + shift, shift)]
+    got = _run_tagged(spark, edges, max_hops=13, pivot=shift)
+    assert got == _py_ref(edges, pivot=shift, max_hops=13)
 
 
 def test_default_pivot_is_min_node(spark):

@@ -88,7 +88,9 @@ def bowtie(
     lo, hi = nodes.agg(F.min("node"), F.max("node")).collect()[0]
     if pivot is None:
         pivot = lo
-    off = int(hi) + 1 - min(0, int(lo))  # disjoint even with negatives
+    # backward copies x + off start at hi + 1 + max(lo, 0) > hi, so the
+    # two sweeps split on node > hi — negative ids included
+    off = int(hi) + 1 - min(0, int(lo))
     fwd_e = e
     bwd_e = e.select(
         (F.col("dst") + off).alias("src"), (F.col("src") + off).alias("dst")
@@ -107,13 +109,12 @@ def bowtie(
     # which-sweep flag) and a max-combine collapses the <= 2 rows per
     # node — same CORE/IN/OUT/OTHER classification, one join and one
     # broadcast build fewer
+    bwd = F.col("node") > int(hi)
     flags = (
         reached.select(
-            F.when(F.col("node") < off, F.col("node"))
-            .otherwise(F.col("node") - off)
-            .alias("node"),
-            F.when(F.col("node") < off, 1).otherwise(0).alias("_f"),
-            F.when(F.col("node") >= off, 1).otherwise(0).alias("_b"),
+            F.when(bwd, F.col("node") - off).otherwise(F.col("node")).alias("node"),
+            F.when(bwd, 0).otherwise(1).alias("_f"),
+            F.when(bwd, 1).otherwise(0).alias("_b"),
         )
         .groupBy("node")
         .agg(F.max("_f").alias("_f"), F.max("_b").alias("_b"))

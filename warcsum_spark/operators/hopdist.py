@@ -106,8 +106,10 @@ def _bfs_loop(e, visited, frontier, max_hops):
         # round's count() job materializes it through the anti-join (one
         # job per round instead of two — measured 51→45 jobs on the
         # driver query); the break-round's count materializes the final
-        # union, so the returned frame is always backed by persisted
-        # blocks.
+        # union. When the loop instead uses up ``max_hops`` without an
+        # empty round, nothing has run on the last round's union: the
+        # returned frame is then a LAZY checkpoint, and callers that need
+        # persisted blocks must force it themselves.
         # narrow coalesce: a plain union concatenates partition lists, so
         # visited would grow by frontier's partition count EVERY round
         # (measured 3→31 partitions over a 15-round sweep — every later

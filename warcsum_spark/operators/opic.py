@@ -32,10 +32,11 @@ Pinned, engine-portable semantics (the pagerank.py discipline):
   is T (each round banks one unit of cash), so this is the paper's
   (H + C)/(ΣH + 1) normalization with the sum closed-form.
 
-Plan shape: identical to pagerank — one edge⋈cash join + one
-dst-keyed aggregation per round over (long, double) rows, dangling
-mass a one-row broadcast, ``localCheckpoint`` lineage cuts per round;
-rounds are a parameter (a crawler runs ONE round per frontier cycle).
+Plan shape: pagerank.py's shared ``mass_flow`` loop with ``cash`` as
+the one flowing column — one edge⋈cash join + one dst-keyed
+aggregation per round over (long, double) rows, dangling mass a
+one-row broadcast, ``localCheckpoint`` lineage cuts per round; rounds
+are a parameter (a crawler runs ONE round per frontier cycle).
 
 Reference anchor: SURVEY §2.11 — the reference has no importance
 metric; OPIC is the crawl-native one (frontier/politeness.py orders by
@@ -47,6 +48,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from warcsum_spark.operators.pagerank import _link_flow, mass_flow
+
 
 def opic(
     edges: DataFrame,
@@ -57,78 +60,23 @@ def opic(
 ) -> DataFrame:
     """(node, cash, history, importance) after ``iters`` synchronous
     OPIC rounds. See module docstring for the pinned semantics."""
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    rs = round_scale
+    state = mass_flow(
+        *_link_flow(edges, src_col, dst_col),
+        {
+            "cash": (
+                F.round(F.lit(1.0) / F.col("_n"), rs),
+                lambda contrib, dm: F.round(contrib + dm / F.col("_n"), rs),
+            ),
+            # banks the PREVIOUS round's cash (step reads the old state)
+            "hist": (
+                F.lit(0.0),
+                lambda contrib, dm: F.round(F.col("hist") + F.col("cash"), rs),
+            ),
+        },
+        ("cash",),
+        iters,
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    deg = e.groupBy("src").agg(F.count("*").alias("_deg"))
-    e_w = e.join(deg, "src").localCheckpoint(eager=True)
-    # fixed dangling flag precomputed once — the per-round state⋈deg
-    # anti-join becomes a filter over the checkpointed state (the
-    # pagerank.py discipline)
-    nd = nodes.join(
-        deg.select(F.col("src").alias("node"), F.lit(True).alias("_has_out")),
-        "node",
-        "left",
-    ).select(
-        "node", F.coalesce("_has_out", F.lit(False)).alias("_has_out")
-    ).localCheckpoint(eager=True)
-    n1 = nd.agg(F.count("*").alias("_n"))
-
-    state = (
-        nd.crossJoin(F.broadcast(n1))
-        .select(
-            "node",
-            "_has_out",
-            F.round(F.lit(1.0) / F.col("_n"), round_scale).alias("cash"),
-            F.lit(0.0).alias("hist"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    # plain per-round planning in the small-state regime (no-op at
-    # production scale) + lazy per-round checkpoints — the
-    # pagerank.py discipline
-    from warcsum_spark.session import loop_plan_conf
-
-    with loop_plan_conf(e_w, nd):
-        for _ in range(iters):
-            contribs = (
-                e_w.join(state, e_w.src == state.node)
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("cash") / F.col("_deg")).alias("c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("c").alias("_contrib"))
-            )
-            dangling = state.filter(~F.col("_has_out")).agg(
-                F.coalesce(F.sum("cash"), F.lit(0.0)).alias("_dm")
-            )
-            state = (
-                state.join(contribs, "node", "left")
-                .crossJoin(F.broadcast(dangling))
-                .crossJoin(F.broadcast(n1))
-                .select(
-                    "node",
-                    "_has_out",
-                    F.round(
-                        F.coalesce(F.col("_contrib"), F.lit(0.0))
-                        + F.col("_dm") / F.col("_n"),
-                        round_scale,
-                    ).alias("cash"),
-                    F.round(F.col("hist") + F.col("cash"), round_scale).alias(
-                        "hist"
-                    ),
-                )
-                .localCheckpoint(eager=False)
-            )
     return state.select(
         "node",
         "cash",

@@ -15,6 +15,13 @@ outlinks — crawl frontiers are FULL of these: every not-yet-fetched
 leaf) is redistributed uniformly via a one-row broadcast join, never a
 driver collect.
 
+One loop for every link-mass operator: ``_link_flow`` builds the
+shared edge prep (distinct edges with out-degree, the node table with
+its fixed flags, the one-row constants) and ``mass_flow`` runs the
+rounds. PageRank, TrustRank (T79), spam mass (T121: both ranks as two
+columns of ONE loop) and OPIC (operators/opic.py, T100) differ only in
+their per-column start and update expressions, which they pass in.
+
 Engine-portability: ranks are rounded to ``round_scale`` decimals at
 the END of every iteration, which pins the float trajectory bit-for-bit
 across engines — the driver's DuckDB oracle unrolls the same iterations
@@ -34,6 +41,158 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _link_flow(
+    edges: DataFrame,
+    src_col: str = "src",
+    dst_col: str = "dst",
+    seeds: DataFrame | None = None,
+    seed_col: str = "node",
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The edge prep every link-mass loop shares: ``(e_w, marked,
+    consts)``. ``e_w`` is the distinct (src, dst, _deg) edge list; duplicate
+    edges are collapsed (link multiplicity does not multiply mass flow —
+    the classic formulation). ``marked`` is the node table (every id
+    appearing as src or dst) with the FIXED dangling flag ``_has_out`` —
+    computing it once replaces the per-round state⋈deg anti-join with a
+    filter over the already-materialized state, one join + two exchanges
+    fewer per round — and, when ``seeds`` is given, the ``_is_seed`` flag
+    (seeds outside the graph drop out here). ``consts`` is the one-row
+    ``(_n[, _ns])`` frame each round broadcasts: node count and, with
+    seeds, the effective seed count."""
+    e = (
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    deg = e.groupBy("src").agg(F.count("*").alias("_deg"))
+    flags = [F.coalesce(F.col("_has_out"), F.lit(False)).alias("_has_out")]
+    consts = [F.count("*").alias("_n")]
+    if seeds is not None:
+        s = seeds.select(F.col(seed_col).alias("node")).distinct()
+        nodes = nodes.join(
+            F.broadcast(s.withColumn("_is_seed", F.lit(True))), "node", "left"
+        )
+        flags.insert(
+            0, F.coalesce(F.col("_is_seed"), F.lit(False)).alias("_is_seed")
+        )
+        consts.append(F.sum(F.col("_is_seed").cast("long")).alias("_ns"))
+    marked = nodes.join(
+        deg.select(F.col("src").alias("node"), F.lit(True).alias("_has_out")),
+        "node",
+        "left",
+    ).select("node", *flags).localCheckpoint(eager=True)
+    e_w = e.join(deg, "src").localCheckpoint(eager=True)
+    return e_w, marked, marked.agg(*consts)
+
+
+def mass_flow(
+    e_w: DataFrame,
+    marked: DataFrame,
+    consts: DataFrame,
+    columns: dict,
+    flows: tuple[str, ...],
+    iters: int,
+) -> DataFrame:
+    """``iters`` rounds of link-mass flow over ``_link_flow``'s output;
+    returns the final state: ``marked``'s columns plus one per
+    ``columns`` entry.
+
+    ``columns`` maps each state column to ``(start, step)``: ``start``
+    is its round-0 expression over marked ⋈ consts, and ``step(contrib,
+    dm)`` its next value, where ``contrib`` is the column's mass
+    arriving over in-links this round (0.0 when none) and ``dm`` the
+    total mass the dangling nodes held. ``step`` is evaluated over the
+    previous state ⋈ contributions ⋈ dangling mass ⋈ consts, so it may
+    read any previous-state or consts column. Only the columns named in
+    ``flows`` travel along edges, each split evenly over its node's
+    out-links; the step of any other column must ignore ``contrib`` and
+    ``dm``.
+
+    Each round is ONE edge⋈state join + ONE dst-keyed aggregation
+    summing every flow column, ONE dangling-mass scan, and ONE state
+    update — all flow columns share the round's shuffles."""
+    from warcsum_spark.session import loop_plan_conf
+
+    state = (
+        marked.crossJoin(F.broadcast(consts))
+        .select(*marked.columns, *[s.alias(c) for c, (s, _) in columns.items()])
+        .localCheckpoint(eager=True)
+    )
+    # plain per-round planning in the small-state regime (no-op at
+    # production scale) — see session.loop_plan_conf; per-round
+    # checkpoints are LAZY (plan truncation happens at build either
+    # way; materialization merges into the next round's stages)
+    with loop_plan_conf(e_w, marked):
+        for _ in range(iters):
+            contribs = (
+                e_w.join(state, e_w.src == state.node)
+                .select(
+                    F.col("dst").alias("node"),
+                    *[(F.col(c) / F.col("_deg")).alias(f"_c_{c}") for c in flows],
+                )
+                .groupBy("node")
+                .agg(*[F.sum(f"_c_{c}").alias(f"_contrib_{c}") for c in flows])
+            )
+            dangling = state.filter(~F.col("_has_out")).agg(
+                *[F.coalesce(F.sum(c), F.lit(0.0)).alias(f"_dm_{c}") for c in flows]
+            )
+            state = (
+                state.join(contribs, "node", "left")
+                .crossJoin(F.broadcast(dangling))
+                .crossJoin(F.broadcast(consts))
+                .select(
+                    *marked.columns,
+                    *[
+                        step(
+                            F.coalesce(F.col(f"_contrib_{c}"), F.lit(0.0)),
+                            F.col(f"_dm_{c}"),
+                        ).alias(c)
+                        for c, (_, step) in columns.items()
+                    ],
+                )
+                .localCheckpoint(eager=False)
+            )
+    return state
+
+
+def _pagerank_column(damping: float, round_scale: int) -> tuple:
+    """T32's ``(start, step)`` for ``mass_flow``: uniform start, uniform
+    (1−d)/n teleport, dangling mass spread uniformly."""
+
+    def step(contrib, dm):
+        return F.round(
+            (1.0 - damping) / F.col("_n")
+            + damping * (contrib + dm / F.col("_n")),
+            round_scale,
+        )
+
+    return F.round(F.lit(1.0) / F.col("_n"), round_scale), step
+
+
+def _trustrank_column(damping: float, round_scale: int) -> tuple:
+    """T79's ``(start, step)`` for ``mass_flow``: start, teleport and
+    dangling mass all concentrate on the seeds."""
+
+    def teleport():
+        return F.when(
+            F.col("_is_seed"), F.lit(1.0) / F.col("_ns")
+        ).otherwise(F.lit(0.0))
+
+    def step(contrib, dm):
+        return F.round(
+            (1.0 - damping) * teleport()
+            + damping * (contrib + dm * teleport()),
+            round_scale,
+        )
+
+    return F.round(teleport(), round_scale), step
+
+
 def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
@@ -46,73 +205,12 @@ def pagerank(
     start. Nodes are every id appearing as src or dst; duplicate edges
     are collapsed (link multiplicity does not multiply rank flow —
     match the classic formulation)."""
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    ranks = mass_flow(
+        *_link_flow(edges, src_col, dst_col),
+        {"rank": _pagerank_column(damping, round_scale)},
+        ("rank",),
+        iters,
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    deg = e.groupBy("src").agg(F.count("*").alias("_deg"))
-    e_w = e.join(deg, "src").localCheckpoint(eager=True)  # (src, dst, _deg)
-    # node table with the FIXED dangling flag (no out-edges): computing it
-    # once replaces the per-round ranks⋈deg anti-join with a filter over
-    # the already-materialized ranks — one join + two exchanges fewer per
-    # iteration, same dangling set by construction
-    nd = nodes.join(
-        deg.select(F.col("src").alias("node"), F.lit(True).alias("_has_out")),
-        "node",
-        "left",
-    ).select(
-        "node", F.coalesce("_has_out", F.lit(False)).alias("_has_out")
-    ).localCheckpoint(eager=True)
-    n1 = nd.agg(F.count("*").alias("_n"))  # one row, broadcast below
-
-    ranks = nd.crossJoin(F.broadcast(n1)).select(
-        "node",
-        "_has_out",
-        F.round(F.lit(1.0) / F.col("_n"), round_scale).alias("rank"),
-    ).localCheckpoint(eager=True)
-
-    # plain per-round planning in the small-state regime (no-op at
-    # production scale) — see session.loop_plan_conf; per-round
-    # checkpoints are LAZY (plan truncation happens at build either
-    # way; materialization merges into the next round's stages)
-    from warcsum_spark.session import loop_plan_conf
-
-    with loop_plan_conf(e_w, nd):
-        for _ in range(iters):
-            contribs = (
-                e_w.join(ranks, e_w.src == ranks.node)
-                .select(F.col("dst").alias("node"), (F.col("rank") / F.col("_deg")).alias("c"))
-                .groupBy("node")
-                .agg(F.sum("c").alias("_contrib"))
-            )
-            dangling = ranks.filter(~F.col("_has_out")).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
-            )
-            ranks = (
-                nd.join(contribs, "node", "left")
-                .crossJoin(F.broadcast(dangling))
-                .crossJoin(F.broadcast(n1))
-                .select(
-                    "node",
-                    "_has_out",
-                    F.round(
-                        (1.0 - damping) / F.col("_n")
-                        + damping
-                        * (
-                            F.coalesce(F.col("_contrib"), F.lit(0.0))
-                            + F.col("_dm") / F.col("_n")
-                        ),
-                        round_scale,
-                    ).alias("rank"),
-                )
-                .localCheckpoint(eager=False)
-            )
     return ranks.select("node", "rank")
 
 
@@ -190,87 +288,12 @@ def trustrank(
     broadcast; at 10^10 edges the per-iteration cost is identical to
     pagerank's.
     """
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    ranks = mass_flow(
+        *_link_flow(edges, src_col, dst_col, seeds, seed_col),
+        {"rank": _trustrank_column(damping, round_scale)},
+        ("rank",),
+        iters,
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    s = seeds.select(F.col(seed_col).alias("node")).distinct()
-    deg = e.groupBy("src").agg(F.count("*").alias("_deg"))
-    # seed flag + fixed dangling flag in ONE node table (see pagerank:
-    # the flag replaces the per-round anti-join with a filter)
-    marked = nodes.join(
-        F.broadcast(s.withColumn("_is_seed", F.lit(True))), "node", "left"
-    ).join(
-        deg.select(F.col("src").alias("node"), F.lit(True).alias("_has_out")),
-        "node",
-        "left",
-    ).select(
-        "node",
-        F.coalesce(F.col("_is_seed"), F.lit(False)).alias("_is_seed"),
-        F.coalesce(F.col("_has_out"), F.lit(False)).alias("_has_out"),
-    ).localCheckpoint(eager=True)
-    ns1 = marked.agg(
-        F.sum(F.col("_is_seed").cast("long")).alias("_ns")
-    )  # one row, broadcast below
-    e_w = e.join(deg, "src").localCheckpoint(eager=True)
-
-    def _teleport():
-        return F.when(
-            F.col("_is_seed"), F.lit(1.0) / F.col("_ns")
-        ).otherwise(F.lit(0.0))
-
-    ranks = marked.crossJoin(F.broadcast(ns1)).select(
-        "node",
-        "_is_seed",
-        "_has_out",
-        F.round(_teleport(), round_scale).alias("rank"),
-    ).localCheckpoint(eager=True)
-
-    # plain per-round planning in the small-state regime (no-op at
-    # production scale) — see session.loop_plan_conf; LAZY per-round
-    # checkpoints (see pagerank above)
-    from warcsum_spark.session import loop_plan_conf
-
-    with loop_plan_conf(e_w, marked):
-        for _ in range(iters):
-            contribs = (
-                e_w.join(ranks, e_w.src == ranks.node)
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("rank") / F.col("_deg")).alias("c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("c").alias("_contrib"))
-            )
-            dangling = ranks.filter(~F.col("_has_out")).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
-            )
-            ranks = (
-                marked.join(contribs, "node", "left")
-                .crossJoin(F.broadcast(dangling))
-                .crossJoin(F.broadcast(ns1))
-                .select(
-                    "node",
-                    "_is_seed",
-                    "_has_out",
-                    F.round(
-                        (1.0 - damping) * _teleport()
-                        + damping
-                        * (
-                            F.coalesce(F.col("_contrib"), F.lit(0.0))
-                            + F.col("_dm") * _teleport()
-                        ),
-                        round_scale,
-                    ).alias("rank"),
-                )
-                .localCheckpoint(eager=False)
-            )
     return ranks.select("node", "rank")
 
 
@@ -325,131 +348,6 @@ def trustrank_oracle_sql(
     )
 
 
-def _dual_rank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    damping: float = 0.85,
-    iters: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    seed_col: str = "node",
-    round_scale: int = 10,
-) -> DataFrame:
-    """(node, pagerank, trustrank) — the T32 and T79 power iterations
-    FUSED into one loop for spam_mass: the edge prep (distinct, degree
-    join, flag table) is built once instead of twice, and each round is
-    ONE edge⋈state join + ONE dst-keyed aggregation producing BOTH
-    contribution sums, one two-conditional-sum dangling scan, and one
-    state update carrying both rank columns. Per-column arithmetic is
-    the respective loop's expression VERBATIM (same per-round
-    round(·, round_scale), same teleport/dangling forms), so the fused
-    state trajectory is the pair of the two solo trajectories —
-    snapshot-verified bit-equal."""
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    s = seeds.select(F.col(seed_col).alias("node")).distinct()
-    deg = e.groupBy("src").agg(F.count("*").alias("_deg"))
-    marked = nodes.join(
-        F.broadcast(s.withColumn("_is_seed", F.lit(True))), "node", "left"
-    ).join(
-        deg.select(F.col("src").alias("node"), F.lit(True).alias("_has_out")),
-        "node",
-        "left",
-    ).select(
-        "node",
-        F.coalesce(F.col("_is_seed"), F.lit(False)).alias("_is_seed"),
-        F.coalesce(F.col("_has_out"), F.lit(False)).alias("_has_out"),
-    ).localCheckpoint(eager=True)
-    n1 = marked.agg(F.count("*").alias("_n"))
-    ns1 = marked.agg(
-        F.sum(F.col("_is_seed").cast("long")).alias("_ns")
-    )
-    e_w = e.join(deg, "src").localCheckpoint(eager=True)
-
-    def _teleport():
-        return F.when(
-            F.col("_is_seed"), F.lit(1.0) / F.col("_ns")
-        ).otherwise(F.lit(0.0))
-
-    state = (
-        marked.crossJoin(F.broadcast(n1))
-        .crossJoin(F.broadcast(ns1))
-        .select(
-            "node",
-            "_is_seed",
-            "_has_out",
-            F.round(F.lit(1.0) / F.col("_n"), round_scale).alias("pr"),
-            F.round(_teleport(), round_scale).alias("tr"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    from warcsum_spark.session import loop_plan_conf
-
-    with loop_plan_conf(e_w, marked):
-        for _ in range(iters):
-            contribs = (
-                e_w.join(state, e_w.src == state.node)
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("pr") / F.col("_deg")).alias("c_pr"),
-                    (F.col("tr") / F.col("_deg")).alias("c_tr"),
-                )
-                .groupBy("node")
-                .agg(
-                    F.sum("c_pr").alias("_contrib_pr"),
-                    F.sum("c_tr").alias("_contrib_tr"),
-                )
-            )
-            dangling = state.filter(~F.col("_has_out")).agg(
-                F.coalesce(F.sum("pr"), F.lit(0.0)).alias("_dm_pr"),
-                F.coalesce(F.sum("tr"), F.lit(0.0)).alias("_dm_tr"),
-            )
-            state = (
-                marked.join(contribs, "node", "left")
-                .crossJoin(F.broadcast(dangling))
-                .crossJoin(F.broadcast(n1))
-                .crossJoin(F.broadcast(ns1))
-                .select(
-                    "node",
-                    "_is_seed",
-                    "_has_out",
-                    F.round(
-                        (1.0 - damping) / F.col("_n")
-                        + damping
-                        * (
-                            F.coalesce(F.col("_contrib_pr"), F.lit(0.0))
-                            + F.col("_dm_pr") / F.col("_n")
-                        ),
-                        round_scale,
-                    ).alias("pr"),
-                    F.round(
-                        (1.0 - damping) * _teleport()
-                        + damping
-                        * (
-                            F.coalesce(F.col("_contrib_tr"), F.lit(0.0))
-                            + F.col("_dm_tr") * _teleport()
-                        ),
-                        round_scale,
-                    ).alias("tr"),
-                )
-                .localCheckpoint(eager=False)
-            )
-    return state.select(
-        "node",
-        F.round("pr", 8).alias("pagerank"),
-        F.round("tr", 8).alias("trustrank"),
-    )
-
-
 def spam_mass(
     edges: DataFrame,
     seeds: DataFrame,
@@ -479,15 +377,28 @@ def spam_mass(
     ``is_spam`` tests the ROUNDED rel_mass — every column engine-exact.
     Seeds, as in T79, are dimension-sized and broadcast.
 
-    Plan shape: the two power iterations run their T32-discipline
-    loops unchanged (one edge join + one dst-keyed agg per round,
-    localCheckpoint lineage cuts); the composition adds ONE
-    node-keyed join of two (node, double) tables and a map-only
-    projection. At 10^10 edges both ranks are computed once per crawl
-    cycle anyway — this materializes their difference."""
-    j = _dual_rank(
-        edges, seeds, damping=damping, iters=iters,
-        src_col=src_col, dst_col=dst_col, seed_col=seed_col,
+    Plan shape: both ranks are two columns of ONE ``mass_flow`` loop —
+    the edge prep is built once, and each round is one edge join + one
+    dst-keyed aggregation summing both contributions, one dangling scan
+    over both columns and one state update (localCheckpoint lineage
+    cuts). Each column's arithmetic is its solo operator's expression
+    verbatim, so both follow the solo trajectories bit for bit; the
+    composition adds only a map-only projection. At 10^10 edges both
+    ranks are computed once per crawl cycle anyway — this materializes
+    their difference."""
+    state = mass_flow(
+        *_link_flow(edges, src_col, dst_col, seeds, seed_col),
+        {
+            "pr": _pagerank_column(damping, 10),
+            "tr": _trustrank_column(damping, 10),
+        },
+        ("pr", "tr"),
+        iters,
+    )
+    j = state.select(
+        "node",
+        F.round("pr", 8).alias("pagerank"),
+        F.round("tr", 8).alias("trustrank"),
     )
     mass = F.round(F.col("pagerank") - F.col("trustrank"), 8)
     rel = F.round(

@@ -231,6 +231,13 @@ def loop_plan_conf(*frames):
     its coalescing / skew-split behavior — the policy is derived from the
     input, never from the local core count (guide §2: scale-adaptive
     partitioning, not constants).
+
+    The switch is SESSION-GLOBAL: for the loop's duration it sets
+    ``spark.sql.adaptive.enabled=false`` and pins
+    ``spark.sql.shuffle.partitions`` on the shared ``SparkSession`` conf,
+    restoring both on exit. Any other query planned on the same session
+    meanwhile (another thread) gets those settings too, so this assumes
+    one query is planned at a time per session.
     """
     from contextlib import contextmanager
 
