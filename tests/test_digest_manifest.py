@@ -171,3 +171,80 @@ def test_truncation_at_member_edges_keeps_prefix(spark, tmp_path):
         assert got == expected
         # first member always survives; second only when fully present
         assert len(got) == (2 if cut >= len(g1) + len(g2) else 1)
+
+
+# ---------------------------------------------------------------------------
+# members larger than, and ending on, the scan's inflate chunk: the walk
+# feeds each member's inflater _CHUNK bytes at a time, so a member that
+# spans several chunks or ends exactly on a chunk edge must split the same
+# way as the oracle's whole-rest-of-file walk
+# ---------------------------------------------------------------------------
+
+
+def _multi_chunk_members() -> list[bytes]:
+    """gzip members: small ones on both sides of an incompressible member
+    larger than two chunks and of members whose compressed end falls one
+    byte before, exactly on and one byte after a chunk edge."""
+    import gzip
+    import random
+
+    from warcsum_spark.fixtures import _gz
+    from warcsum_spark.sources.warc import _CHUNK
+
+    rng = random.Random(4)
+
+    def small(i: int) -> bytes:
+        return _gz(_padded_member(f"http://c.test/s{i}".encode(), 300, b"small %d" % i))
+
+    big = _padded_member(b"http://c.test/big", 300, rng.randbytes(2 * _CHUNK + 5000))
+    members = [small(0), _gz(big), small(1)]
+    noise = rng.randbytes(_CHUNK)
+    for delta in (-1, 0, 1):
+        uri = f"http://c.test/edge{delta}".encode()
+        # a stored (level-0) member grows by exactly one byte per payload
+        # byte below the 64 KiB stored-block limit
+        base = len(gzip.compress(_padded_member(uri, 300, b""), compresslevel=0, mtime=0))
+        edge = gzip.compress(
+            _padded_member(uri, 300, noise[: _CHUNK + delta - base]), compresslevel=0, mtime=0
+        )
+        assert len(edge) == _CHUNK + delta
+        members += [edge, small(delta + 3)]
+    return members
+
+
+def test_walk_matches_oracle_across_chunk_edges():
+    from warcsum_spark.oracle import iter_gzip_members
+    from warcsum_spark.sources.warc import _split_members
+
+    members = _multi_chunk_members()
+    blob = b"".join(members)
+    got = list(_split_members(blob))
+    assert got == list(iter_gzip_members(blob))
+    assert [length for _, length, _ in got] == [len(m) for m in members]
+
+
+def test_walk_stops_at_bad_member_after_multi_chunk_member():
+    """A corrupt member, or one truncated after more than two chunks, that
+    follows a multi-chunk member ends the walk and keeps the prefix."""
+    from warcsum_spark.oracle import iter_gzip_members
+    from warcsum_spark.sources.warc import _CHUNK, _split_members
+
+    small0, big, small1 = _multi_chunk_members()[:3]
+    prefix = small0 + big
+    for tail in (b"\x1f\x8b\x08junk" + small1, big[: 2 * _CHUNK + 7]):
+        assert list(_split_members(prefix + tail)) == list(iter_gzip_members(prefix))
+
+
+def test_multi_chunk_members_match_oracle(spark, tmp_path):
+    import os
+
+    d = tmp_path / "chunks"
+    os.makedirs(d)
+    members = _multi_chunk_members()
+    (d / "chunks.warc.gz").write_bytes(b"".join(members))
+    expected = sorted(
+        manifest_lines(oracle_manifest([str(d / "chunks.warc.gz")], algo="sha1", force=True))
+    )
+    got = spark_manifest_lines(spark, str(d), algo="sha1", force=True)
+    assert got == expected
+    assert len(got) == len(members)

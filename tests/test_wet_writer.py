@@ -67,13 +67,7 @@ def test_wet_scanner_reingests_members(spark, tmp_path):
     checked via the stored digest, not the payload column."""
     out = str(tmp_path / "wet2")
     write_wet_archives(_docs(spark), out, prefix="t").collect()
-    # pathGlobFilter is *.warc.gz on the scanner; read explicit paths
-    paths = glob.glob(out + "/*.warc.wet.gz")
-    raw = spark.read.format("binaryFile").load(paths).select("path", "content")
-    from warcsum_spark.sources.warc import _scan_batches, MEMBER_SCHEMA
-
-    members = raw.mapInPandas(_scan_batches, schema=MEMBER_SCHEMA)
-    rows = members.collect()
+    rows = scan_warc_members(spark, out, glob="*.warc.wet.gz").collect()
     assert len(rows) == 40
     assert all(r["is_warc"] and r["warc_type"] == "conversion" for r in rows)
     assert all(r["content_type"] == "text/plain" for r in rows)
