@@ -176,11 +176,7 @@ def test_fast_canonicalizer_equals_udf(spark):
     inside the UDF: a JVM CASE around an ArrowEvalPython cannot skip rows,
     so there is no separate JVM fast path to cross-check anymore.)"""
     from warcsum_spark.fixtures import gen_web_pages
-    from warcsum_spark.functions.urls import (
-        canonicalize_one,
-        canonicalize_url,
-        canonicalize_url_fast,
-    )
+    from warcsum_spark.functions.urls import canonicalize_one, canonicalize_url
 
     urls = [r["url"] for r in gen_web_pages(400, seed=11)]
     _seeds, lg, _b, _r = gen_frontier_fixture()
@@ -204,15 +200,9 @@ def test_fast_canonicalizer_equals_udf(spark):
         "not a url",
     ]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
-    rows = df.select(
-        "url",
-        canonicalize_url("url").alias("tiered"),
-        canonicalize_url_fast(F.col("url")).alias("fast"),
-    ).collect()
+    rows = df.select("url", canonicalize_url("url").alias("tiered")).collect()
     for r in rows:
-        spec = canonicalize_one(r["url"])
-        assert r["tiered"] == spec, r["url"]
-        assert r["fast"] == spec, r["url"]
+        assert r["tiered"] == canonicalize_one(r["url"]), r["url"]
 
 
 def test_robots_equal_length_tie_resolves_to_allow(spark):

@@ -1,6 +1,6 @@
 """T57 revisit-record WARC sink (sources/revisit_writer.py): duplicate
 payloads stored once, later captures as identical-payload-digest revisit
-records. Round-trip pinned via an independent pure-Python parser AND the
+records. Round-trip pinned via the oracle's pure-Python parser AND the
 engine scanner; storage shrink and plan shape asserted."""
 
 from __future__ import annotations
@@ -10,9 +10,9 @@ from hashlib import sha1
 
 from pyspark.sql import functions as F
 
+from warcsum_spark.oracle import parse_archive
 from warcsum_spark.sources.revisit_writer import (
     REVISIT_PROFILE,
-    parse_archive,
     plan_revisits,
     write_deduped_archives,
 )

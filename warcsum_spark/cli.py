@@ -219,7 +219,9 @@ def build_parser() -> argparse.ArgumentParser:
     )
     common = argparse.ArgumentParser(add_help=False)
     common.add_argument(
-        "--cores", default=None, help="local[N] cores (default: env/32)"
+        "--cores",
+        default=None,
+        help="local[N] cores (default: $SPARK_GRAFT_CPUS, else every core)",
     )
     sub = p.add_subparsers(dest="cmd", required=True, parser_class=argparse.ArgumentParser)
 

@@ -168,6 +168,13 @@ def canonicalize_url(urls: pa.Array) -> pa.Array:
     * It must be an arrow_udf, not a pandas_udf: pandas object-dtype
       conversion boxes every string twice (in+out), which cost ~10× the
       regex kernel itself on the 4M-row bench frontier stage.
+
+    A DataFrame-level split-union (JVM rlike gate routes canonical rows
+    around the UDF) was ALSO measured and rejected: java.util.regex
+    evaluates the accept-pattern at ~6 µs/row, costing more than the
+    Arrow round-trip it avoids (9.9 s vs 4.7 s for the 4M-row frontier
+    canonicalize at 8 cores). RE2-via-pyarrow inside the UDF is ~20×
+    faster than the same pattern in the JVM.
     """
     urls = _chunked(urls)
     fast = pc.fill_null(
@@ -206,20 +213,6 @@ def url_host(urls: pa.Array) -> pa.Array:
         len(urls), slow_idx.tolist(), (_host_of(v) for v in slow_vals)
     )
     return _chunked(pc.if_else(ok, host, scattered))
-
-
-def canonicalize_url_fast(url: Column) -> Column:
-    """Kept as the public name used by older call sites; the fast path
-    lives inside ``canonicalize_url`` itself (see its docstring — a
-    JVM-side CASE cannot skip an ArrowEvalPython).
-
-    A DataFrame-level split-union (JVM rlike gate routes canonical rows
-    around the UDF) was ALSO measured and rejected: java.util.regex
-    evaluates the accept-pattern at ~6 µs/row, costing more than the
-    Arrow round-trip it avoids (9.9 s vs 4.7 s for the 4M-row frontier
-    canonicalize at 8 cores). RE2-via-pyarrow inside the UDF is ~20×
-    faster than the same pattern in the JVM."""
-    return canonicalize_url(url)
 
 
 def url_host_canonical(canon_url: Column) -> Column:

@@ -19,11 +19,15 @@ Spark-first shape:
   struct — field order is struct order, so the envelope bytes are
   deterministic and cross-engine reproducible. No Python in the plan;
   the whole projection fuses into the scan.
-- ``write_wat_archives`` reuses the partition-grain ``mapInPandas``
-  runner from sources/warc_writer.py: one ``.warc.wat.gz`` per
-  non-empty partition, one gzip member per metadata record, byte-
-  deterministic framing (fixed compresslevel/mtime). File size falls
-  out of upstream partition sizing — the sink adds no shuffle.
+- ``write_wat_archives`` frames each envelope with
+  ``warc_writer.warc_record`` (``WARC-Type: metadata``, JSON payload)
+  and writes it through ``warc_writer.write_partition_archives``, the
+  partition-grain ``mapInPandas`` runner every sink shares: one
+  ``.warc.wat.gz`` per non-empty partition, one gzip member per
+  metadata record, byte-deterministic framing (fixed compresslevel/
+  mtime). File size falls out of upstream partition sizing — the sink
+  adds no shuffle. The WARC-Date is ``warc_writer.warc_date``, the
+  same expression as the other sinks.
 
 At 100 TB: the envelope is a map-only projection of the page scan
 (links/title regex + hash), so WAT generation rides the same pass that
@@ -34,6 +38,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from warcsum_spark.sources.warc_writer import (
+    warc_date,
+    warc_record,
+    write_partition_archives,
+)
 
 # group 1 = href value. Mirrors functions/html.py::_HREF (no-whitespace
 # value class) but stays in the Java-regex ∩ RE2 ∩ DuckDB common subset
@@ -96,14 +106,9 @@ def wat_metadata(
     every field is coalesced non-null so the envelope never depends on
     engine-specific null-field elision."""
     cols = wat_envelope_cols(html_col, digest=digest)
-    date = (
-        F.date_format(F.col(date_col), "yyyy-MM-dd'T'HH:mm:ss'Z'")
-        if date_col
-        else F.lit(default_date)
-    )
     base = pages.select(
         F.col(url_col).cast("string").alias("url"),
-        date.alias("date"),
+        warc_date(date_col, default_date).alias("date"),
         F.coalesce(cols["title"], F.lit("")).alias("title"),
         F.coalesce(cols["links"], F.array().cast("array<string>")).alias(
             "links"
@@ -143,11 +148,6 @@ def write_wat_archives(
     manifest (path, n_records, bytes) — an action on it IS the write
     (same contract as write_warc_archives). Envelope construction stays
     JVM-side; the Python runner only frames bytes."""
-    from warcsum_spark.sources.warc_writer import (
-        _metadata_record,
-        _run_partition_writer,
-    )
-
     meta = wat_metadata(
         pages,
         url_col=url_col,
@@ -159,12 +159,13 @@ def write_wat_archives(
         F.col("url").alias("_uri"),
         F.encode("envelope", "UTF-8").alias("_payload"),
         F.col("date").alias("_date"),
-        F.spark_partition_id().alias("_pid"),
     )
-    return _run_partition_writer(
+    return write_partition_archives(
         src,
         out_dir,
         prefix,
         ".warc.wat.gz",
-        lambda uri, date, payload: _metadata_record(uri, date, bytes(payload)),
+        lambda uri, envelope, date: warc_record(
+            "metadata", uri, date, "application/json", envelope, envelope
+        ),
     )

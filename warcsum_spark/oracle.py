@@ -64,6 +64,33 @@ def iter_gzip_members(data: bytes):
         pos += consumed
 
 
+def parse_archive(path: str) -> list[dict]:
+    """Every record of an archive as {type, uri, date, headers, body}:
+    the WARC header block split on ``": "`` (all record types, no
+    filters) and ``body`` = the Content-Length bytes after it. The
+    round-trip reference for the sink tests — independent of the engine
+    scanner."""
+    with open(path, "rb") as f:
+        data = f.read()
+    out = []
+    for _, _, member in iter_gzip_members(data):
+        head, _, rest = member.partition(b"\r\n\r\n")
+        hdrs = {}
+        for ln in head.split(b"\r\n")[1:]:
+            k, _, v = ln.partition(b": ")
+            hdrs[k.decode()] = v.decode()
+        out.append(
+            {
+                "type": hdrs["WARC-Type"],
+                "uri": hdrs["WARC-Target-URI"],
+                "date": hdrs["WARC-Date"],
+                "headers": hdrs,
+                "body": rest[: int(hdrs["Content-Length"])],
+            }
+        )
+    return out
+
+
 # ---------------------------------------------------------------------------
 # header parsing
 # ---------------------------------------------------------------------------

@@ -12,58 +12,30 @@ response record; every later capture → a payload-less revisit carrying
 Plan shape at 100 TB: ``plan_revisits`` is ONE digest-keyed exchange —
 row_number + first_value share the same window, and the shuffle carries
 (digest, url, date) plus the payload that must be written anyway;
-there is no self-join. The write itself is the partition-grain
-``mapInPandas`` runner pattern shared with the WARC/WET sinks (one
-archive per partition, no extra shuffle); archive size = partition
-size.
+there is no self-join. The write itself is
+``warc_writer.write_partition_archives``, the partition-grain
+``mapInPandas`` runner shared with the WARC/WET/WAT sinks (one archive
+per partition, no extra shuffle); archive size = partition size. Both
+record kinds are ``warc_writer.warc_record`` calls: a response record
+(HTTP block + payload), or a revisit whose block is the HTTP headers
+alone while its payload digest still names the stored payload. The
+runner's ``counts=("n_revisits",)`` tallies the revisits per archive.
 """
 
 from __future__ import annotations
 
-import gzip
-import os
-from base64 import b32encode
-from collections.abc import Iterator
-from hashlib import sha1
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from warcsum_spark.sources.warc_writer import WRITE_MANIFEST_SCHEMA, _record
+from warcsum_spark.sources.warc_writer import (
+    HTTP_RESPONSE_TYPE,
+    http_block,
+    warc_date,
+    warc_record,
+    write_partition_archives,
+)
 
 REVISIT_PROFILE = "http://netpreserve.org/warc/1.1/revisit/identical-payload-digest"
-
-DEDUP_MANIFEST_SCHEMA = WRITE_MANIFEST_SCHEMA + ", n_revisits long"
-
-
-def _revisit_record(
-    uri: str,
-    date: str,
-    payload_digest_b32: str,
-    ref_uri: str,
-    ref_date: str,
-    content_type: str,
-) -> bytes:
-    """One revisit record: HTTP headers retained, body omitted (the
-    identical-payload-digest profile — the digest names the stored
-    payload, Refers-To names where it lives)."""
-    http_block = (
-        b"HTTP/1.1 200 OK\r\nContent-Type: " + content_type.encode() + b"\r\n\r\n"
-    )
-    lines = [
-        b"WARC/1.0",
-        b"WARC-Type: revisit",
-        b"WARC-Target-URI: " + uri.encode(),
-        b"WARC-Date: " + date.encode(),
-        b"WARC-Profile: " + REVISIT_PROFILE.encode(),
-        b"WARC-Refers-To-Target-URI: " + ref_uri.encode(),
-        b"WARC-Refers-To-Date: " + ref_date.encode(),
-        b"Content-Type: application/http; msgtype=response",
-        b"WARC-Payload-Digest: sha1:" + payload_digest_b32.encode(),
-        b"Content-Length: " + str(len(http_block)).encode(),
-    ]
-    return b"\r\n".join(lines) + b"\r\n\r\n" + http_block + b"\r\n\r\n"
 
 
 def plan_revisits(
@@ -80,15 +52,10 @@ def plan_revisits(
     and both first_values share the window); null payloads pass through
     as is_first (nothing to dedup against). The fixed-format UTC date
     string orders lexicographically == chronologically."""
-    date = (
-        F.date_format(F.col(date_col), "yyyy-MM-dd'T'HH:mm:ss'Z'")
-        if date_col
-        else F.lit(default_date)
-    )
     d = pages.select(
         F.col(uri_col).alias("_uri"),
         F.col(payload_col).alias("_payload"),
-        date.alias("_date"),
+        warc_date(date_col, default_date).alias("_date"),
     ).withColumn("_digest", F.sha1(F.col("_payload")))
     w = Window.partitionBy("_digest").orderBy("_date", "_uri")
     return d.select(
@@ -118,94 +85,39 @@ def write_deduped_archives(
     revisit record referencing the first. Returns the lazy write
     manifest (path, n_records, bytes, n_revisits) — an action on it IS
     the write."""
-    planned = plan_revisits(
-        pages, uri_col, payload_col, date_col, default_date
-    ).withColumn("_pid", F.spark_partition_id())
+    planned = plan_revisits(pages, uri_col, payload_col, date_col, default_date)
+    src = planned.select(
+        "_uri",
+        "_payload",
+        "_date",
+        (~F.col("is_first")).alias("n_revisits"),
+        "ref_uri",
+        "ref_date",
+    )
+    http = http_block(content_type)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fh = None
-        path = None
-        n = 0
-        n_rev = 0
-        for pdf in batches:
-            for uri, payload, dt, is_first, ref_uri, ref_date, pid in zip(
-                pdf["_uri"],
-                pdf["_payload"],
-                pdf["_date"],
-                pdf["is_first"],
-                pdf["ref_uri"],
-                pdf["ref_date"],
-                pdf["_pid"],
-            ):
-                if payload is None:
-                    continue
-                if fh is None:
-                    path = os.path.join(
-                        out_dir, f"{prefix}-{int(pid):05d}.warc.gz"
-                    )
-                    os.makedirs(out_dir, exist_ok=True)
-                    fh = open(path, "wb")
-                if is_first:
-                    member = _record(str(uri), str(dt), bytes(payload), content_type)
-                else:
-                    b32 = (
-                        b32encode(sha1(bytes(payload)).digest())
-                        .decode()
-                        .rstrip("=")
-                    )
-                    member = _revisit_record(
-                        str(uri),
-                        str(dt),
-                        b32,
-                        str(ref_uri),
-                        str(ref_date),
-                        content_type,
-                    )
-                    n_rev += 1
-                fh.write(gzip.compress(member, compresslevel=6, mtime=0))
-                n += 1
-        if fh is None:
-            return
-        fh.close()
-        yield pd.DataFrame(
-            {
-                "path": [path],
-                "n_records": [n],
-                "bytes": [os.path.getsize(path)],
-                "n_revisits": [n_rev],
-            }
+    def record(uri, payload, date, revisit, ref_uri, ref_date) -> bytes:
+        if not revisit:
+            return warc_record(
+                "response", uri, date, HTTP_RESPONSE_TYPE, http + payload, payload
+            )
+        # identical-payload-digest profile: HTTP headers retained, body
+        # omitted — the digest names the stored payload, Refers-To names
+        # where it lives
+        return warc_record(
+            "revisit",
+            uri,
+            date,
+            HTTP_RESPONSE_TYPE,
+            http,
+            payload,
+            (
+                f"WARC-Profile: {REVISIT_PROFILE}",
+                f"WARC-Refers-To-Target-URI: {ref_uri}",
+                f"WARC-Refers-To-Date: {ref_date}",
+            ),
         )
 
-    return planned.mapInPandas(run, schema=DEDUP_MANIFEST_SCHEMA)
-
-
-def parse_archive(path: str) -> list[dict]:
-    """Pure-Python oracle parser for the round-trip tests: walk gzip
-    members, split WARC headers, return [{type, uri, date, headers,
-    body}] — independent of the engine scanner."""
-    import zlib
-
-    out = []
-    with open(path, "rb") as f:
-        blob = f.read()
-    pos = 0
-    while pos < len(blob):
-        d = zlib.decompressobj(31)
-        member = d.decompress(blob[pos:])
-        pos = len(blob) - len(d.unused_data)
-        head, _, rest = member.partition(b"\r\n\r\n")
-        lines = head.split(b"\r\n")
-        hdrs = {}
-        for ln in lines[1:]:
-            k, _, v = ln.partition(b": ")
-            hdrs[k.decode()] = v.decode()
-        out.append(
-            {
-                "type": hdrs["WARC-Type"],
-                "uri": hdrs["WARC-Target-URI"],
-                "date": hdrs["WARC-Date"],
-                "headers": hdrs,
-                "body": rest[: int(hdrs["Content-Length"])],
-            }
-        )
-    return out
+    return write_partition_archives(
+        src, out_dir, prefix, ".warc.gz", record, counts=("n_revisits",)
+    )
