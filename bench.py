@@ -130,13 +130,24 @@ def main() -> None:
     os.makedirs(os.path.join(repo, "BENCH"), exist_ok=True)
     with open(os.path.join(repo, "BENCH", "headline_full.json"), "w") as f:
         json.dump(payload, f, indent=1)
+    print(compact_line(payload, arts))
+    spark.stop()
+
+
+def compact_line(payload: dict, arts: list[dict]) -> str:
+    """The last stdout line: every headline key's time, as a positional
+    array in ``HEADLINE`` order (``queries_order`` names it), so all 107
+    fit the driver's 2000-char tail capture (≈890 chars) without naming
+    each query. ``arts`` are the stored --scale-suite artifacts."""
+    times = payload["queries"]
     compact = {
         "metric": payload["metric"],
-        "value": total,
+        "value": payload["value"],
         "unit": "sec",
-        "sf": float(sf),
+        "sf": payload["sf"],
         "n_queries": len(times),
-        "queries": times,
+        "queries": [times.get(name) for name in HEADLINE],
+        "queries_order": "bench.HEADLINE",
         "loadavg_1min": payload["loadavg_1min"],
         "queries_full": "BENCH/headline_full.json",
     }
@@ -150,19 +161,7 @@ def main() -> None:
             )
             for a in arts
         )
-    if len(json.dumps(compact, separators=(",", ":"))) > 1900:
-        # never let the last line outgrow the driver's 2000-char stdout
-        # tail — shed per-query timings slowest-first until it fits (the
-        # full dict persists in headline_full.json either way), so the
-        # tail parser still sees the queries that dominate the total
-        ranked = sorted(times.items(), key=lambda kv: -kv[1])
-        keep = dict(ranked)
-        while keep and len(json.dumps(compact, separators=(",", ":"))) > 1900:
-            keep.pop(ranked[len(keep) - 1][0])
-            compact["queries"] = keep
-            compact["queries_omitted"] = len(times) - len(keep)
-    print(json.dumps(compact, separators=(",", ":")))
-    spark.stop()
+    return json.dumps(compact, separators=(",", ":"))
 
 
 def _table_rows(sf_dir: str, table: str) -> int:

@@ -4,6 +4,7 @@ simulator's crawl ordering and URL-seen membership round by round
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -60,8 +61,11 @@ def test_crawl_matches_simulator(spark, use_bloom, salt):
         )
         got = scheduled_order(scheduled)
         assert got == sim.scheduled_per_round[rnd], f"round {rnd}"
-    got_seen = {r["url"] for r in state.seen.collect()}
-    assert got_seen == sim.seen
+        # the invariant that lets the round skip a seen gate over pending
+        assert state.pending.select("url").intersect(state.seen).count() == 0, rnd
+    got_seen = [r["url"] for r in state.seen.collect()]
+    assert len(got_seen) == len(sim.seen)  # one row per url: no distinct needed
+    assert set(got_seen) == sim.seen
 
 
 def test_seen_filter_no_false_negatives(spark):
@@ -76,6 +80,46 @@ def test_seen_filter_no_false_negatives(spark):
     got = {r["url"] for r in filter_unseen(cand, seen, filters, 8).collect()}
     expect = set(urls[1500:])
     assert got == expect
+
+
+def test_seen_gate_tests_each_candidate_once(spark):
+    """The tested frame feeds two branches (definitely-new, maybe-seen);
+    the filter test must still run once per candidate, not once per
+    branch."""
+    from warcsum_spark.frontier.seen import _bloom_contains, _gate
+
+    urls = [f"http://h{i % 37}.test/p/{i}" for i in range(3000)]
+    seen = spark.createDataFrame([(u,) for u in urls[:1500]], "url string")
+    cand = spark.createDataFrame(
+        [(u, 1.0) for u in urls[1000:]], "url string, priority double"
+    )
+    filters = build_seen_filters(seen, n_partitions=8)
+    tested = spark.sparkContext.accumulator(0)
+
+    def contains(blob, n_keys, h64):
+        tested.add(len(h64))
+        return _bloom_contains(blob, n_keys, h64)
+
+    got = {r["url"] for r in _gate(cand, seen, filters, 8, contains).collect()}
+    assert got == set(urls[1500:])
+    assert tested.value == 2000
+
+
+def test_filters_spread_partition_routed_keys():
+    """Every key of one filter partition shares its xxhash64 residue mod
+    n_partitions; after the runner's remix the bloom tier keeps its design
+    fpp and the cuckoo tier fills without overflow."""
+    from warcsum_spark.frontier.cuckoo import CuckooTable
+    from warcsum_spark.frontier.seen import _bloom_contains, _bloom_encode, _remix
+
+    rng = np.random.RandomState(11)
+    keys = rng.randint(-(2**63), 2**63 - 1, size=200_000, dtype=np.int64).view(np.uint64)
+    routed = _remix(keys[keys % np.uint64(16) == np.uint64(3)])
+    member, probe = routed[:1270], routed[1270:]
+    assert _bloom_contains(_bloom_encode(member, 0.01), len(member), probe).mean() < 0.02
+    table = CuckooTable(len(member))
+    assert table.insert_many(member) == 0
+    assert table.contains_many(member).all()
 
 
 def test_politeness_budget_never_exceeded(spark):
@@ -361,8 +405,9 @@ def test_crawl_matches_simulator_with_blocklist(spark, inline):
             blocklist=bl, block_patterns=patterns,
         )
         assert scheduled_order(scheduled) == sim.scheduled_per_round[rnd], f"round {rnd}"
-    got_seen = {r["url"] for r in state.seen.collect()}
-    assert got_seen == sim.seen
+    got_seen = [r["url"] for r in state.seen.collect()]
+    assert len(got_seen) == len(sim.seen)  # one row per url: no distinct needed
+    assert set(got_seen) == sim.seen
 
 
 def sim_all_pending(seeds, link_graph):

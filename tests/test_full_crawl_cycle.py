@@ -124,6 +124,7 @@ def test_full_cycle(spark, site, tmp_path):
         state, sched = frontier_round(
             spark, state, source, politeness=budgets, default_budget=2
         )
+        assert state.pending.select("url").intersect(state.seen).count() == 0, rnd
         fetched = fetch_pages(
             sched.select("url"), lambda: HttpRangeFetcher(timeout=10)
         ).filter(F.col("status") == 200)

@@ -45,6 +45,7 @@ def test_run_crawl_through_store_resumes_like_uninterrupted(spark, tmp_path):
     assert store.newest_round() == 2
 
     resumed = store.load()
+    assert resumed.pending.select("url").intersect(resumed.seen).count() == 0
     for rnd in (2, 3):
         resumed, scheduled = frontier_round(
             spark, resumed, lg_df, robots=robots_df, politeness=pol_df

@@ -1,6 +1,7 @@
 """URL-frontier + fetch scheduler (north_rule; no reference counterpart).
 
-Iterative-batch supersteps over Iceberg/parquet state: canonicalize →
-URL-seen gate (exact anti-join + per-partition bloom short-circuit) →
-robots gate → per-host politeness top-k → schedule → discover → checkpoint.
+Iterative-batch supersteps over Iceberg/parquet state: robots gate →
+per-host politeness top-k → schedule → discover → canonicalize → URL-seen
+gate against seen ∪ pending (exact anti-join + optional per-partition
+bloom/cuckoo short-circuit) → checkpoint.
 """

@@ -28,9 +28,9 @@ import re
 from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import spark_partition_id
 
 from warcsum_spark.frontier.superstep import FRONTIER_SCHEMA, SEEN_SCHEMA, FrontierState
+from warcsum_spark.operators.stats import partition_metrics
 
 _ROUND_RE = re.compile(r"^round_(\d+)$")
 
@@ -98,9 +98,7 @@ def save_checkpoint(
     if filters is not None:
         filters.write.mode("overwrite").parquet(os.path.join(d, "url_seen_filters"))
     # per-partition lineage: which partition carried how many frontier rows
-    lineage = state.pending.groupBy(
-        spark_partition_id().alias("partition_id")
-    ).agg(F.count("*").alias("n_rows"))
+    lineage = partition_metrics(state.pending)
     lineage.write.mode("overwrite").parquet(os.path.join(d, "lineage"))
     marker = {"round": state.round_no, "metrics": metrics or {}}
     _write_marker(

@@ -3,13 +3,13 @@ alternative to the bloom tier (north_star: "bloom/cuckoo-filter URL-seen
 set"; design per Fan et al., "Cuckoo Filter: Practically Better Than
 Bloom", CoNEXT'14, and PAPERS.md's learned-cuckoo line of work).
 
-Same contract as frontier/seen.py's bloom tier: blobs are plain binary
-rows ``(partition_id, n_keys, filter_blob)`` built per hash-partition of
-the seen table and co-grouped against candidates; "definitely not seen"
-candidates skip the exact anti-join, and the exact tier resolves the
-false positives, so the combined gate stays exactly correct. Unlike
-bloom, a cuckoo filter supports deletion — relevant when a crawl retracts
-URLs (robots change, host blacklisting) without rebuilding the filter.
+Same contract as frontier/seen.py's bloom tier, and the same runners:
+seen.py's ``_build_blobs`` and ``_gate`` build the per-partition blobs
+and run the two-tier gate; this module supplies only the two hooks they
+take, the blob encoder (``CuckooTable.insert_many`` + ``to_blob``) and
+the membership test (``_cuckoo_contains``). Unlike bloom, a cuckoo filter
+supports deletion — relevant when a crawl retracts URLs (robots change,
+host blacklisting) without rebuilding the filter.
 
 Layout: buckets of 4 single-byte fingerprints (fp 1..255; 0 = empty).
 Insert uses the standard two-bucket partial-key cuckoo scheme:
@@ -20,21 +20,14 @@ with vectorized numpy bulk inserts and a bounded eviction loop.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from warcsum_spark.frontier.seen import partition_id
+from warcsum_spark.frontier.seen import _build_blobs, _gate
 
 BUCKET_SIZE = 4
 MAX_KICKS = 250
-
-CUCKOO_SCHEMA = (
-    "partition_id int, n_keys long, n_partitions int, filter_blob binary"
-)
 
 
 def _fp(h64: np.ndarray) -> np.ndarray:
@@ -168,39 +161,24 @@ class CuckooTable:
         return t
 
 
-def _h64_col():
-    return F.xxhash64(F.col("url"))
+def _cuckoo_contains(blob: bytes, n_keys: int, h64: np.ndarray) -> np.ndarray:
+    return CuckooTable.from_blob(blob).contains_many(h64)
 
 
 def build_seen_cuckoo(
     seen: DataFrame, n_partitions: int = 64, load: float = 0.84
 ) -> DataFrame:
-    """seen(url) → url_seen(partition_id, n_keys, n_partitions, filter_blob).
+    """seen(url) → url_seen cuckoo blobs (partition_id, n_keys,
+    n_partitions, filter_blob). ``load`` is exposed for tests that force
+    overflow; production uses the 0.84 design load. Overflow keys land in
+    the blob's side exact list."""
 
-    ``n_partitions`` is persisted with each blob so the read side can verify
-    it was built with the same partitioning function (a mismatch would
-    silently route candidates to the wrong blob). ``load`` is exposed for
-    tests that force overflow; production uses the 0.84 design load."""
+    def encode(h64: np.ndarray) -> bytes:
+        t = CuckooTable(len(h64), load=load)
+        t.insert_many(h64)
+        return t.to_blob()
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(pdf["partition_id"].iloc[0])
-        h = pdf["h64"].to_numpy(dtype=np.int64).view(np.uint64)
-        t = CuckooTable(len(h), load=load)
-        t.insert_many(h)  # overflow keys land in the blob's side exact list
-        return pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "n_keys": [len(h)],
-                "n_partitions": [n_partitions],
-                "filter_blob": [t.to_blob()],
-            }
-        )
-
-    return (
-        seen.select(partition_id(n_partitions).alias("partition_id"), _h64_col().alias("h64"))
-        .groupBy("partition_id")
-        .applyInPandas(build, schema=CUCKOO_SCHEMA)
-    )
+    return _build_blobs(seen, n_partitions, encode)
 
 
 def filter_unseen_cuckoo(
@@ -212,38 +190,4 @@ def filter_unseen_cuckoo(
     """Two-tier gate with cuckoo blobs: same exact-correctness contract as
     seen.filter_unseen (cuckoo false positives resolved by the exact
     anti-join; zero false negatives by construction)."""
-    cand = candidates.withColumn("partition_id", partition_id(n_partitions)).withColumn(
-        "h64", _h64_col()
-    )
-
-    def test(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return left.assign(maybe_seen=pd.Series([], dtype=bool))
-        if right.empty:
-            return left.assign(maybe_seen=False)
-        built_with = int(right["n_partitions"].iloc[0])
-        if built_with != n_partitions:
-            raise ValueError(
-                f"cuckoo filters were built with n_partitions={built_with} "
-                f"but filter_unseen_cuckoo was called with {n_partitions}; "
-                "mismatched partitioning silently corrupts the seen gate"
-            )
-        t = CuckooTable.from_blob(right["filter_blob"].iloc[0])
-        h = left["h64"].to_numpy(dtype=np.int64).view(np.uint64)
-        return left.assign(maybe_seen=t.contains_many(h))
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in cand.schema.fields
-    ) + ", maybe_seen boolean"
-    tested = (
-        cand.groupBy("partition_id")
-        .cogroup(filters.groupBy("partition_id"))
-        .applyInPandas(test, schema=out_schema)
-    )
-    from warcsum_spark.frontier.seen import anti_join_urls
-
-    definitely_new = tested.filter(~F.col("maybe_seen"))
-    confirmed_new = anti_join_urls(tested.filter(F.col("maybe_seen")), seen)
-    return definitely_new.unionByName(confirmed_new).drop(
-        "partition_id", "h64", "maybe_seen"
-    )
+    return _gate(candidates, seen, filters, n_partitions, _cuckoo_contains)

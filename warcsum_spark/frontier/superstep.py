@@ -1,12 +1,20 @@
 """R6 — the frontier superstep: one crawl round as a single Spark job.
 
-    scheduled   = top-k-per-host( robots_ok( pending ∖ seen ) )
-    seen'       = seen ∪ scheduled
-    discovered  = canonicalize( outlinks(scheduled) ) ∖ seen' ∖ pending
+    scheduled   = top-k-per-host( robots_ok( pending ) )
+    seen'       = seen ⊎ scheduled
+    discovered  = canonicalize( outlinks(scheduled) ) ∖ (seen ∪ pending)
     pending'    = (pending ∖ scheduled) ∪ discovered
 
-All set operations key on the canonical URL. Everything is DataFrame ops;
-the only Python is the canonicalizer UDF over newly discovered links.
+All set operations key on the canonical URL (``⊎`` is a disjoint union;
+pending holds one row per URL). Invariant: ``pending ∩ seen = ∅`` —
+``init_frontier`` starts with an empty seen set, and every round adds to
+seen only scheduled URLs (which leave pending) and adds to pending only
+URLs in neither set. So pending needs no seen gate, seen' needs no
+distinct, and the URL-seen gate (exact, or with the bloom/cuckoo tier of
+frontier/seen.py) runs once, on the discoveries, where it filters:
+``seen' ∪ pending = seen ∪ pending`` because ``scheduled ⊆ pending``.
+Everything is DataFrame ops; the only Python is the canonicalizer UDF
+over newly discovered links (and the filter tier's blob build and test).
 The crawl loop is iterative batch (SURVEY §2.9): supersteps with
 checkpointed state, not Structured Streaming.
 
@@ -24,9 +32,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from warcsum_spark.frontier.cuckoo import build_seen_cuckoo, filter_unseen_cuckoo
 from warcsum_spark.frontier.politeness import schedule_per_host
 from warcsum_spark.frontier.robots import robots_allowed
-from warcsum_spark.frontier.seen import build_seen_filters, filter_unseen
+from warcsum_spark.frontier.seen import anti_join_urls, build_seen_filters, filter_unseen
 from warcsum_spark.functions.urls import canonicalize_url, url_host_canonical
 
 FRONTIER_SCHEMA = T.StructType(
@@ -87,6 +96,10 @@ def frontier_round(
     ``scheduled`` carries (url, host, priority, depth, host_rank) — the
     deterministic crawl order for the round is (host ASC, host_rank ASC).
 
+    ``state`` must satisfy ``pending ∩ seen = ∅`` (module docstring); the
+    returned state does too. ``use_bloom`` (False = exact | True = bloom |
+    "cuckoo") picks the filter tier of the discovery gate.
+
     ``materialize`` truncates lineage each round (localCheckpoint): an
     iterative job whose state stays lazy re-executes EVERY prior round's
     joins on each action and the plan grows without bound. In production
@@ -94,22 +107,7 @@ def frontier_round(
     same cut; localCheckpoint is the in-memory equivalent between
     durable checkpoints.
     """
-    pending = state.pending
-    filters = None
-    if use_bloom == "cuckoo":
-        from warcsum_spark.frontier.cuckoo import (
-            build_seen_cuckoo,
-            filter_unseen_cuckoo,
-        )
-
-        filters = build_seen_cuckoo(state.seen, n_partitions=bloom_partitions)
-        candidates = filter_unseen_cuckoo(
-            pending, state.seen, filters, bloom_partitions
-        )
-    else:
-        if use_bloom:
-            filters = build_seen_filters(state.seen, n_partitions=bloom_partitions)
-        candidates = filter_unseen(pending, state.seen, filters, bloom_partitions)
+    pending = candidates = state.pending
     if blocklist is not None or block_patterns:
         # UT1-style pre-fetch gate between "discovered" and "scheduled":
         # blocked URLs are never scheduled, but they stay pending (and
@@ -148,7 +146,8 @@ def frontier_round(
         scheduled = scheduled.localCheckpoint(eager=True)
 
     sched_urls = scheduled.select("url", "priority", "depth")
-    new_seen = state.seen.unionByName(sched_urls.select("url")).distinct()
+    # disjoint union, no distinct: scheduled ⊆ pending, one row per url
+    new_seen = state.seen.unionByName(sched_urls.select("url"))
 
     # fetch: look up outlinks of scheduled urls, or run the real fetcher
     out_edges = (
@@ -166,14 +165,19 @@ def frontier_round(
         .groupBy("url")
         .agg(F.max("priority").alias("priority"), F.min("depth").alias("depth"))
     )
-    # ∖ seen' ∖ pending  (a URL already pending keeps its original priority)
-    from warcsum_spark.frontier.seen import anti_join_urls
-
-    discoveries = (
-        anti_join_urls(anti_join_urls(discoveries, new_seen), pending.select("url"))
-        .withColumn("host", url_host_canonical(F.col("url")))
-        .select([f.name for f in FRONTIER_SCHEMA.fields])
+    # ∖ seen' ∖ pending = ∖ (seen ∪ pending), a disjoint union by the
+    # invariant (a URL already pending keeps its original priority)
+    known = state.seen.unionByName(pending.select("url"))
+    build, gate = (
+        (build_seen_cuckoo, filter_unseen_cuckoo)
+        if use_bloom == "cuckoo"
+        else (build_seen_filters, filter_unseen)
     )
+    filters = build(known, n_partitions=bloom_partitions) if use_bloom else None
+    discoveries = gate(discoveries, known, filters, bloom_partitions)
+    discoveries = discoveries.withColumn(
+        "host", url_host_canonical(F.col("url"))
+    ).select([f.name for f in FRONTIER_SCHEMA.fields])
     new_pending = (
         anti_join_urls(pending, sched_urls.select("url"))
         .select([f.name for f in FRONTIER_SCHEMA.fields])

@@ -40,27 +40,31 @@ SEPARATOR = b"\r\n\r\n"
 # gzip member walk
 # ---------------------------------------------------------------------------
 
+_GZIP_CHUNK = 1 << 16
+
+
 def iter_gzip_members(data: bytes):
     """Yield (offset, compressed_length, inflated_bytes) per gzip member.
 
     A .warc.gz is a concatenation of independent gzip members
     (warcsum.h:20–21). zlib with wbits=31 stops at each member's end;
-    ``unused_data`` marks the start of the next member.
+    ``unused_data`` marks the start of the next member. Each inflater is
+    fed ``_GZIP_CHUNK``-byte slices of a ``memoryview``, so the walk is
+    linear in the file size (no per-member copy of the rest of the file).
     """
-    pos = 0
-    n = len(data)
+    view = memoryview(data)
+    pos, n = 0, len(view)
     while pos < n:
         d = zlib.decompressobj(wbits=31)
-        inflated = d.decompress(data[pos:])
-        while not d.eof:
-            chunk = d.decompress(b"")
-            if not chunk:
-                break
-            inflated += chunk
+        out = []
+        end = pos
+        while not d.eof and end < n:
+            out.append(d.decompress(view[end : end + _GZIP_CHUNK]))
+            end = min(end + _GZIP_CHUNK, n)
         if not d.eof:
             raise ValueError(f"truncated gzip member at offset {pos}")
-        consumed = (n - pos) - len(d.unused_data)
-        yield pos, consumed, inflated
+        consumed = end - pos - len(d.unused_data)
+        yield pos, consumed, b"".join(out)
         pos += consumed
 
 
