@@ -52,7 +52,9 @@ def test_cli_dedup_and_split_roundtrip(spark, tmp_path, capsys):
     assert sorted(split_lines) == sorted(expect_m)
 
 
-def test_cli_crawl_matches_simulator(spark, tmp_path, capsys):
+def _crawl_inputs(spark, tmp_path):
+    """The frontier fixture as crawl command inputs: (fixture, seeds text
+    file, link-graph, politeness and robots parquet paths)."""
     seeds, link_graph, budgets, robots = gen_frontier_fixture()
     seeds_txt = tmp_path / "seeds.txt"
     seeds_txt.write_text("".join(f"{u} {p}\n" for u, p in seeds))
@@ -74,11 +76,18 @@ def test_cli_crawl_matches_simulator(spark, tmp_path, capsys):
     )
     rob_path = str(tmp_path / "rob.parquet")
     rob_df.write.parquet(rob_path)
+    fixture = (seeds, link_graph, budgets, robots)
+    return fixture, str(seeds_txt), lg_path, pol_path, rob_path
+
+
+def test_cli_crawl_matches_simulator(spark, tmp_path, capsys):
+    fixture, seeds_txt, lg_path, pol_path, rob_path = _crawl_inputs(spark, tmp_path)
+    seeds, link_graph, budgets, robots = fixture
 
     rc = main(
         [
             "crawl",
-            "--seeds", str(seeds_txt),
+            "--seeds", seeds_txt,
             "--link-graph", lg_path,
             "--robots", rob_path,
             "--politeness", pol_path,
@@ -186,6 +195,45 @@ def test_cli_crawl_parquet_branch_never_collects(spark, tmp_path, monkeypatch):
     written = sorted(_glob.glob(f"{out}/scheduled_round_*"))
     assert len(written) == 2
     assert spark.read.parquet(written[0]).count() > 0
+
+
+def test_cli_crawl_checkpoint_resumes_like_simulator(spark, tmp_path, capsys):
+    """crawl --checkpoint commits every round through the store: the
+    newest commit is round 2, keeps pending ∩ seen = ∅, and two more
+    rounds from it schedule what the simulator's rounds 2-3 do."""
+    from warcsum_spark.frontier.statestore import ParquetDirectoryStore
+    from warcsum_spark.frontier.superstep import frontier_round, scheduled_order
+
+    fixture, seeds_txt, lg_path, pol_path, rob_path = _crawl_inputs(spark, tmp_path)
+    seeds, link_graph, budgets, robots = fixture
+    ckpt = str(tmp_path / "ckpt")
+
+    rc = main(
+        [
+            "crawl",
+            "--seeds", seeds_txt,
+            "--link-graph", lg_path,
+            "--robots", rob_path,
+            "--politeness", pol_path,
+            "--rounds", "2",
+            "--checkpoint", ckpt,
+            "-o", "-",
+        ]
+    )
+    assert rc == 0
+    capsys.readouterr()
+
+    state = ParquetDirectoryStore(spark, ckpt).load()
+    assert state.round_no == 2
+    assert state.pending.select("url").intersect(state.seen).count() == 0
+    sim = simulate_crawl(seeds, link_graph, budgets, robots, rounds=4)
+    for rnd in (2, 3):
+        state, scheduled = frontier_round(
+            spark, state, spark.read.parquet(lg_path),
+            robots=spark.read.parquet(rob_path),
+            politeness=spark.read.parquet(pol_path),
+        )
+        assert scheduled_order(scheduled) == sim.scheduled_per_round[rnd], rnd
 
 
 def test_cli_cdx_matches_oracle(spark, tmp_path, capsys):

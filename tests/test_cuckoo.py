@@ -33,6 +33,27 @@ def test_cuckoo_table_local():
     assert t.contains_many(victims).mean() < 0.05
 
 
+def test_cuckoo_bulk_insert_fills_design_load_and_holes():
+    """The numpy placement passes plus the eviction loop store every key
+    exactly once: a table filled to the 0.84 design load overflows
+    nothing, and keys inserted after a delete land in the freed slots
+    (a bucket's free slots need not be its leading ones)."""
+    rng = np.random.RandomState(9)
+    n = int(0.84 * 4 * 4096)  # 4096 buckets of 4, filled to 0.84
+    keys = rng.randint(0, 2**63 - 1, size=n, dtype=np.int64).view(np.uint64)
+    t = CuckooTable(n)
+    assert t.m == 4096
+    assert t.insert_many(keys) == 0
+    assert (t.slots != 0).sum() == len(keys)
+    assert t.contains_many(keys).all()
+    gone, kept = keys[::3], np.setdiff1d(keys, keys[::3])
+    assert t.delete_many(gone) == len(gone)
+    fresh = rng.randint(0, 2**63 - 1, size=len(gone), dtype=np.int64).view(np.uint64)
+    overflow = t.insert_many(fresh)
+    assert (t.slots != 0).sum() + overflow == len(keys)
+    assert t.contains_many(kept).all() and t.contains_many(fresh).all()
+
+
 def test_cuckoo_gate_exactness(spark):
     urls = [f"http://h{i % 23}.test/p/{i}" for i in range(4000)]
     seen = spark.createDataFrame([(u,) for u in urls[:2000]], "url string")

@@ -68,6 +68,29 @@ def test_crawl_matches_simulator(spark, use_bloom, salt):
     assert set(got_seen) == sim.seen
 
 
+@pytest.mark.parametrize("use_bloom", [False, True, "cuckoo"])
+def test_round_zero_runs_no_more_jobs_than_round_one(spark, use_bloom):
+    """init_frontier cuts the seed frontier: round 0's consumers of
+    pending (schedule, seen ∪ pending, pending ∖ scheduled) must not each
+    re-run the seed canonicalizer and groupBy."""
+    (_seeds, _lg, _b, _r, seeds_df, lg_df, pol_df, robots_df) = _fixture_dfs(spark)
+    sc = spark.sparkContext
+    state = init_frontier(spark, seeds_df)
+    jobs = []
+    for rnd in range(2):
+        group = f"round-jobs-{use_bloom}-{rnd}"
+        sc.setJobGroup(group, group)
+        try:
+            state, _ = frontier_round(
+                spark, state, lg_df, robots=robots_df, politeness=pol_df,
+                use_bloom=use_bloom,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[0] <= jobs[1], jobs
+
+
 def test_seen_filter_no_false_negatives(spark):
     """Bloom tier must never drop a genuinely-new URL (zero false
     negatives) and combined with the exact tier must equal plain anti-join."""
@@ -271,37 +294,15 @@ def test_robots_equal_length_tie_resolves_to_allow(spark):
     assert robots_allows([(True, "/a/"), (False, "/a/x")], "/a/x") is False
 
 
-def test_latest_round_ignores_stray_names(spark, tmp_path):
-    from warcsum_spark.frontier.checkpoint import latest_round
+def test_newest_round_ignores_stray_names(spark, tmp_path):
+    from warcsum_spark.frontier.statestore import ParquetDirectoryStore
 
     root = tmp_path / "ckpt"
     (root / "round_000003").mkdir(parents=True)
     (root / "round_000003" / "_COMMIT").write_text("{}")
     (root / "round_tmp").mkdir()  # stray: must not crash the int parse
     (root / "notes.txt").write_text("x")
-    assert latest_round(str(root)) == 3
-    assert latest_round(str(root), spark) == 3
-
-
-def test_checkpoint_resume_equals_uninterrupted(spark, tmp_path):
-    from warcsum_spark.frontier.checkpoint import load_checkpoint, save_checkpoint
-
-    (seeds, link_graph, budgets, robots, seeds_df, lg_df, pol_df, robots_df) = _fixture_dfs(spark)
-    sim = simulate_crawl(seeds, link_graph, budgets, robots, rounds=4)
-
-    root = str(tmp_path / "ckpt")
-    state = init_frontier(spark, seeds_df)
-    for _ in range(2):
-        state, _s = frontier_round(spark, state, lg_df, robots=robots_df, politeness=pol_df)
-    save_checkpoint(root, state, metrics={"n": 2})
-
-    resumed = load_checkpoint(spark, root)
-    assert resumed.round_no == 2
-    for rnd in (2, 3):
-        resumed, scheduled = frontier_round(
-            spark, resumed, lg_df, robots=robots_df, politeness=pol_df
-        )
-        assert scheduled_order(scheduled) == sim.scheduled_per_round[rnd], f"round {rnd}"
+    assert ParquetDirectoryStore(spark, str(root)).newest_round() == 3
 
 
 def test_checkpoint_host_hash_bucketed_layout(spark, tmp_path):
@@ -310,23 +311,23 @@ def test_checkpoint_host_hash_bucketed_layout(spark, tmp_path):
     while preserving the frontier content exactly."""
     import os as _os
 
-    from warcsum_spark.frontier.checkpoint import load_checkpoint, save_checkpoint
+    from warcsum_spark.frontier.statestore import ParquetDirectoryStore
 
     (_seeds, _lg, _b, _r, seeds_df, lg_df, pol_df, robots_df) = _fixture_dfs(spark)
     state = init_frontier(spark, seeds_df)
     state, _ = frontier_round(spark, state, lg_df, robots=robots_df, politeness=pol_df)
 
-    plain = str(tmp_path / "plain")
-    bucketed = str(tmp_path / "bucketed")
-    save_checkpoint(plain, state)
-    save_checkpoint(bucketed, state, host_hash_buckets=4)
+    plain = ParquetDirectoryStore(spark, str(tmp_path / "plain"))
+    bucketed = ParquetDirectoryStore(spark, str(tmp_path / "bucketed"), host_hash_buckets=4)
+    plain.commit_round(state)
+    bucketed.commit_round(state)
 
-    pend_dir = _os.path.join(bucketed, f"round_{state.round_no:06d}", "pending")
+    pend_dir = _os.path.join(bucketed.root, f"round_{state.round_no:06d}", "pending")
     buckets = [n for n in _os.listdir(pend_dir) if n.startswith("host_bucket=")]
     assert buckets, _os.listdir(pend_dir)
 
-    a = load_checkpoint(spark, plain)
-    b = load_checkpoint(spark, bucketed)
+    a = plain.load()
+    b = bucketed.load()
     assert a.pending.columns == b.pending.columns  # layout column dropped
 
     def rows(df):
@@ -339,7 +340,7 @@ def test_checkpoint_empty_bucketed_frontier_resumes(spark, tmp_path):
     """Regression: a host-bucketed checkpoint of an EMPTY pending frontier
     (the drained-crawl terminal state) wrote no schema-bearing parquet and
     was committed-but-unloadable (UNABLE_TO_INFER_SCHEMA)."""
-    from warcsum_spark.frontier.checkpoint import load_checkpoint, save_checkpoint
+    from warcsum_spark.frontier.statestore import ParquetDirectoryStore
     from warcsum_spark.frontier.superstep import (
         FRONTIER_SCHEMA,
         SEEN_SCHEMA,
@@ -351,9 +352,9 @@ def test_checkpoint_empty_bucketed_frontier_resumes(spark, tmp_path):
         seen=spark.createDataFrame([("http://a.test/",)], SEEN_SCHEMA),
         round_no=5,
     )
-    root = str(tmp_path / "ckpt")
-    save_checkpoint(root, state, host_hash_buckets=4)
-    resumed = load_checkpoint(spark, root)
+    store = ParquetDirectoryStore(spark, str(tmp_path / "ckpt"), host_hash_buckets=4)
+    store.commit_round(state)
+    resumed = store.load()
     assert resumed.round_no == 5
     assert resumed.pending.count() == 0
     assert resumed.pending.columns == [f.name for f in FRONTIER_SCHEMA.fields]

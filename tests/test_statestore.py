@@ -38,13 +38,15 @@ def test_run_crawl_through_store_resumes_like_uninterrupted(spark, tmp_path):
     assert store.newest_round() is None
 
     state = init_frontier(spark, seeds_df)
-    run_crawl(
+    for rnd, (_, scheduled, _m) in enumerate(run_crawl(
         spark, store, state, lg_df, n_rounds=2,
         robots=robots_df, politeness=pol_df,
-    )
+    )):
+        assert scheduled_order(scheduled) == sim.scheduled_per_round[rnd], rnd
     assert store.newest_round() == 2
 
     resumed = store.load()
+    assert resumed.round_no == 2
     assert resumed.pending.select("url").intersect(resumed.seen).count() == 0
     for rnd in (2, 3):
         resumed, scheduled = frontier_round(
@@ -86,10 +88,11 @@ def test_run_crawl_commits_the_tail_round(spark, tmp_path):
     (_, _, _, _, seeds_df, lg_df, pol_df, robots_df) = _fixture_dfs(spark)
     store = ParquetDirectoryStore(spark, str(tmp_path / "ckpt2"))
     state = init_frontier(spark, seeds_df)
-    run_crawl(
+    for _ in run_crawl(
         spark, store, state, lg_df, n_rounds=3, checkpoint_every=2,
         robots=robots_df, politeness=pol_df,
-    )
+    ):
+        pass
     assert store.newest_round() == 3
 
 

@@ -129,12 +129,8 @@ def _cmd_cdx(args: argparse.Namespace) -> int:
 
 
 def _cmd_crawl(args: argparse.Namespace) -> int:
-    from warcsum_spark.frontier.statestore import ParquetDirectoryStore
-    from warcsum_spark.frontier.superstep import (
-        frontier_round,
-        init_frontier,
-        scheduled_order,
-    )
+    from warcsum_spark.frontier.statestore import ParquetDirectoryStore, run_crawl
+    from warcsum_spark.frontier.superstep import init_frontier, scheduled_order
     from warcsum_spark.session import get_spark
 
     spark = get_spark(cores=args.cores)
@@ -168,7 +164,6 @@ def _cmd_crawl(args: argparse.Namespace) -> int:
                 if line.strip() and not line.lstrip().startswith("#")
             ]
 
-    state = init_frontier(spark, seeds)
     # persistence goes through the StateStore seam: swap in
     # IcebergStateStore on a catalog-equipped cluster, same loop
     store = (
@@ -177,37 +172,37 @@ def _cmd_crawl(args: argparse.Namespace) -> int:
     use_bloom: bool | str = {"exact": False, "bloom": True, "cuckoo": "cuckoo"}[
         args.seen_filter
     ]
+    rounds = run_crawl(
+        spark,
+        store,
+        init_frontier(spark, seeds),
+        link_graph,
+        args.rounds,
+        robots=robots,
+        politeness=politeness,
+        blocklist=blocklist,
+        block_patterns=tuple(args.block_pattern or ()),
+        default_budget=args.budget,
+        use_bloom=use_bloom,
+        salt_buckets=args.salt_buckets,
+    )
     summary = []
-    for rnd in range(args.rounds):
-        state, scheduled = frontier_round(
-            spark,
-            state,
-            link_graph,
-            robots=robots,
-            politeness=politeness,
-            blocklist=blocklist,
-            block_patterns=tuple(args.block_pattern or ()),
-            default_budget=args.budget,
-            use_bloom=use_bloom,
-            salt_buckets=args.salt_buckets,
-        )
+    for rnd, (_state, scheduled, metrics) in enumerate(rounds):
         if args.output == "-":
             # stdout mode is explicitly small-output: the driver collect
             # lives ONLY on this branch
             order = scheduled_order(scheduled)
             for u in order:
                 print(f"{rnd} {u}")
-            n_scheduled = len(order)
+            metrics["scheduled"] = len(order)
         else:
             scheduled.select("host", "host_rank", "url").write.mode(
                 "overwrite"
             ).parquet(f"{args.output}/scheduled_round_{rnd:06d}")
             # metrics count over the already-localCheckpointed frame —
             # no rows cross to the driver in parquet mode
-            n_scheduled = scheduled.count()
-        if store is not None:
-            store.commit_round(state, metrics={"scheduled": n_scheduled})
-        summary.append({"round": rnd, "scheduled": n_scheduled})
+            metrics["scheduled"] = scheduled.count()
+        summary.append({"round": rnd, **metrics})
     print(json.dumps({"rounds": summary}), file=sys.stderr)
     return 0
 

@@ -20,6 +20,7 @@ with vectorized numpy bulk inserts and a bounded eviction loop.
 from __future__ import annotations
 
 import math
+import random
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -64,52 +65,70 @@ class CuckooTable:
         self.overflow = np.empty(0, dtype=np.uint64)
 
     def insert_many(self, h64: np.ndarray) -> int:
+        """Insert every key; returns how many went to the overflow list.
+
+        Two numpy passes place every key whose primary, then alternate,
+        bucket still has a free slot (keys aiming at one bucket take its
+        free slots in key order). Only keys that find both buckets full
+        run the eviction loop."""
         fps = _fp(h64)
-        idxs = (h64 % np.uint64(self.m)).astype(np.int64)
-        dropped = []
-        for key, fp, i1 in zip(h64, fps, idxs):
-            if not self._insert(int(fp), int(i1)):
-                dropped.append(key)
+        i1 = (h64 % np.uint64(self.m)).astype(np.int64)
+        left = np.arange(len(h64))
+        for idx in (i1, _alt_index(i1, fps, self.m)):
+            left = self._place(left, idx[left], fps[left])
+        rng = random.Random(self.m)
+        dropped = [
+            h64[k] for k in left if not self._evict_insert(int(fps[k]), int(i1[k]), rng)
+        ]
         if dropped:
             self.overflow = np.concatenate(
                 [self.overflow, np.array(dropped, dtype=np.uint64)]
             )
         return len(dropped)
 
-    def _insert(self, fp: int, i1: int) -> bool:
-        i2 = int(_alt_index(np.array([i1]), np.array([fp], dtype=np.uint8), self.m)[0])
-        for i in (i1, i2):
-            row = self.slots[i]
-            empty = np.nonzero(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = fp
-                return True
-        # evict, remembering the swap chain: on failure the homeless
-        # fingerprint is the LAST victim, not the new key — rolling the
-        # chain back leaves the table exactly as before, so the caller can
-        # safely record the NEW key in the overflow exact list (recording
-        # it without rollback would silently lose the victim key: a false
-        # negative).
+    def _place(self, keys: np.ndarray, idx: np.ndarray, fps: np.ndarray) -> np.ndarray:
+        """Put ``fps`` into free slots of buckets ``idx``; the r-th key
+        aiming at a bucket takes its r-th free slot. Returns the ``keys``
+        that found their bucket full."""
+        order = np.argsort(idx, kind="stable")
+        b = idx[order]
+        starts = np.flatnonzero(np.r_[True, b[1:] != b[:-1]])
+        rank = np.arange(len(b)) - np.repeat(starts, np.diff(np.r_[starts, len(b)]))
+        free = self.slots[b] == 0
+        fits = rank < free.sum(axis=1)
+        # column of each bucket's rank-th free slot (free slots first, in order)
+        free_cols = np.argsort(~free, axis=1, kind="stable")
+        slot = free_cols[np.arange(len(b)), np.minimum(rank, BUCKET_SIZE - 1)]
+        self.slots[b[fits], slot[fits]] = fps[order][fits]
+        return keys[order][~fits]
+
+    def _evict_insert(self, fp: int, i1: int, rng: random.Random) -> bool:
+        # both of the key's buckets are full: evict, remembering the swap
+        # chain. On failure the homeless fingerprint is the LAST victim,
+        # not the new key — rolling the chain back leaves the table
+        # exactly as before, so the caller can safely record the NEW key
+        # in the overflow exact list (recording it without rollback would
+        # silently lose the victim key: a false negative).
+        slots = self.slots
         i = i1
         cur = fp
-        rng = np.random.RandomState((fp * 2654435761 + i1) & 0x7FFFFFFF)
         path: list[tuple[int, int, int]] = []
         for _ in range(MAX_KICKS):
-            slot = int(rng.randint(BUCKET_SIZE))
-            victim = int(self.slots[i, slot])
-            self.slots[i, slot] = cur
+            slot = rng.randrange(BUCKET_SIZE)
+            victim = int(slots[i, slot])
+            slots[i, slot] = cur
             path.append((i, slot, victim))
             cur = victim
-            i = int(
-                _alt_index(np.array([i]), np.array([cur], dtype=np.uint8), self.m)[0]
-            )
-            row = self.slots[i]
-            empty = np.nonzero(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = cur
-                return True
+            # _alt_index over Python ints: must place keys where
+            # contains_many looks for them
+            i = (i ^ ((cur * 0x5BD1E995) & 0xFFFFFFFF)) % self.m
+            row = slots[i]
+            for k in range(BUCKET_SIZE):
+                if row[k] == 0:
+                    row[k] = cur
+                    return True
         for bi, slot, victim in reversed(path):
-            self.slots[bi, slot] = victim
+            slots[bi, slot] = victim
         return False  # table over capacity; caller records overflow
 
     def contains_many(self, h64: np.ndarray) -> np.ndarray:

@@ -21,28 +21,35 @@ constructor change, not a plumbing change.
 
 from __future__ import annotations
 
+import json
+import os
+import re
+from collections.abc import Iterator
 from typing import Protocol, runtime_checkable
 
+# the base class from the public package — both classic and connect
+# exception variants subclass it (the captured-module import would miss
+# the connect one and break the empty-pending resume fallback)
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from warcsum_spark.frontier.checkpoint import (
-    latest_round,
-    load_checkpoint,
-    save_checkpoint,
+from warcsum_spark.frontier.superstep import (
+    FRONTIER_SCHEMA,
+    SEEN_SCHEMA,
+    FrontierState,
+    frontier_round,
 )
-from warcsum_spark.frontier.superstep import FrontierState, frontier_round
+from warcsum_spark.operators.stats import partition_metrics
+
+_ROUND_RE = re.compile(r"^round_(\d+)$")
 
 
 @runtime_checkable
 class StateStore(Protocol):
     """Durable frontier state: commit a round, find the newest, load one."""
 
-    def commit_round(
-        self,
-        state: FrontierState,
-        metrics: dict | None = None,
-        filters: DataFrame | None = None,
-    ) -> str:
+    def commit_round(self, state: FrontierState, metrics: dict | None = None) -> str:
         """Persist ``state`` atomically (torn writes never loadable);
         returns an implementation-specific location string."""
         ...
@@ -58,34 +65,114 @@ class StateStore(Protocol):
 
 
 class ParquetDirectoryStore:
-    """The directory/commit-marker protocol of frontier/checkpoint.py
-    behind the StateStore seam — what this sandbox (and any plain-HDFS/S3
-    deployment without a catalog) runs."""
+    """R8 checkpoint/resume over parquet directories — what a deployment
+    without an Iceberg catalog (local disk, plain HDFS/S3) runs. The same
+    contract as Iceberg's atomic snapshot commits, kept by a
+    write-then-commit-marker protocol so a torn write is never loadable:
+
+        <root>/round_<k>/pending/   parquet
+        <root>/round_<k>/seen/      parquet
+        <root>/round_<k>/lineage/   parquet  (per-partition row counts)
+        <root>/round_<k>/_COMMIT    json marker, written last
+
+    Resume = read the highest committed round. Filter blobs are NOT
+    serialized — they are rebuilt from the seen table on demand
+    (rebuild-from-state beats mutable-blob serialization for
+    false-negative safety, SURVEY §7 hard-part 4). Idempotent: re-running
+    a round overwrites its directory and re-commits. The marker and the
+    round listing go through the JVM Hadoop FS API, so the protocol works
+    on any supported scheme (file://, hdfs://, s3a://).
+
+    ``host_hash_buckets`` > 0 lays the pending frontier out partitioned by
+    ``host_bucket = pmod(xxhash64(host), n)`` (north_rule: 'partitions the
+    10^10-URL frontier by host-hash'): on plain parquet this is a
+    directory-partitioned layout the resumed read can prune by bucket; on
+    Iceberg the same column maps to a ``bucket(N, host)`` partition
+    transform. The politeness stage groups by host, so a bucketed layout
+    means a resumed round's first window shuffle starts from host-wise
+    clustered files instead of a random scatter. The bucket column is
+    layout-only — ``load`` drops it."""
 
     def __init__(self, spark: SparkSession, root: str, host_hash_buckets: int = 0):
         self.spark = spark
         self.root = root
         self.host_hash_buckets = host_hash_buckets
 
-    def commit_round(
-        self,
-        state: FrontierState,
-        metrics: dict | None = None,
-        filters: DataFrame | None = None,
-    ) -> str:
-        return save_checkpoint(
-            self.root,
-            state,
-            metrics=metrics,
-            filters=filters,
-            host_hash_buckets=self.host_hash_buckets,
+    def _round_dir(self, k: int) -> str:
+        return os.path.join(self.root, f"round_{k:06d}")
+
+    def _fs_path(self, *parts):
+        """(FileSystem, Path) of ``parts`` joined, via the Hadoop FS API."""
+        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(os.path.join(*parts))
+        return jpath.getFileSystem(self.spark._jsc.hadoopConfiguration()), jpath
+
+    def commit_round(self, state: FrontierState, metrics: dict | None = None) -> str:
+        d = self._round_dir(state.round_no)
+        pending_path = os.path.join(d, "pending")
+        n = self.host_hash_buckets
+        if n and n > 1:
+            (
+                state.pending.withColumn(
+                    "host_bucket", F.pmod(F.xxhash64("host"), F.lit(n)).cast("int")
+                )
+                .repartition("host_bucket")
+                .write.mode("overwrite")
+                .partitionBy("host_bucket")
+                .parquet(pending_path)
+            )
+        else:
+            state.pending.write.mode("overwrite").parquet(pending_path)
+        state.seen.write.mode("overwrite").parquet(os.path.join(d, "seen"))
+        # per-partition lineage: which partition carried how many frontier rows
+        partition_metrics(state.pending).write.mode("overwrite").parquet(
+            os.path.join(d, "lineage")
         )
+        marker = {"round": state.round_no, "metrics": metrics or {}}
+        fs, jpath = self._fs_path(d, "_COMMIT")
+        out = fs.create(jpath, True)  # overwrite; atomic-enough: written LAST
+        try:
+            out.write(bytearray(json.dumps(marker).encode("utf-8")))
+        finally:
+            out.close()
+        return d
 
     def newest_round(self) -> int | None:
-        return latest_round(self.root, self.spark)
+        """Highest committed round under ``root``. Non-matching directory
+        names (round_tmp, stray files) are ignored."""
+        fs, jroot = self._fs_path(self.root)
+        if not fs.exists(jroot):
+            return None
+        rounds = []
+        for status in fs.listStatus(jroot):
+            name = status.getPath().getName()
+            m = _ROUND_RE.match(name)
+            if m and fs.exists(self._fs_path(self.root, name, "_COMMIT")[1]):
+                rounds.append(int(m.group(1)))
+        return max(rounds) if rounds else None
 
     def load(self, round_no: int | None = None) -> FrontierState:
-        return load_checkpoint(self.spark, self.root, round_no)
+        if round_no is None:
+            round_no = self.newest_round()
+            if round_no is None:
+                raise FileNotFoundError(f"no committed checkpoint under {self.root}")
+        d = self._round_dir(round_no)
+        # no forced read-schema on the happy path: a host-bucketed layout adds
+        # a host_bucket partition directory column, which a fixed schema would
+        # reject. Project + cast back to the frontier contract instead.
+        pend_path = os.path.join(d, "pending")
+        try:
+            pending = self.spark.read.parquet(pend_path).select(
+                *[F.col(f.name).cast(f.dataType) for f in FRONTIER_SCHEMA.fields]
+            )
+        except AnalysisException:
+            # a bucketed write of an EMPTY pending frontier (the drained-crawl
+            # terminal state) emits no schema-bearing part files — inference
+            # fails with UNABLE_TO_INFER_SCHEMA. There are no partition dirs
+            # either, so the forced-schema read is legal and yields the empty
+            # frontier.
+            pending = self.spark.read.schema(FRONTIER_SCHEMA).parquet(pend_path)
+        seen = self.spark.read.schema(SEEN_SCHEMA).parquet(os.path.join(d, "seen"))
+        return FrontierState(pending=pending, seen=seen, round_no=round_no)
 
 
 # ---------------------------------------------------------------------------
@@ -103,7 +190,7 @@ CREATE TABLE IF NOT EXISTS {table} (
 
 def create_pending_table_sql(table: str, host_hash_buckets: int = 64) -> str:
     """``bucket(N, host)`` is the Iceberg spelling of the parquet store's
-    host_bucket directory layout (save_checkpoint docstring)."""
+    host_bucket directory layout (ParquetDirectoryStore docstring)."""
     return f"""
 CREATE TABLE IF NOT EXISTS {table} (
   url STRING NOT NULL,
@@ -201,13 +288,8 @@ class IcebergStateStore:
                                                 self.host_hash_buckets))
         self.spark.sql(create_seen_table_sql(self.seen_table))
 
-    def commit_round(
-        self,
-        state: FrontierState,
-        metrics: dict | None = None,
-        filters: DataFrame | None = None,
-    ) -> str:
-        # filters are rebuildable from seen (zero-false-negative rule,
+    def commit_round(self, state: FrontierState, metrics: dict | None = None) -> str:
+        # filter blobs are rebuilt from seen (zero-false-negative rule,
         # SURVEY §7 #4) and metrics ride the snapshot summary — neither
         # needs its own table
         self.ensure_tables()
@@ -301,27 +383,31 @@ class IcebergStateStore:
 
 def run_crawl(
     spark: SparkSession,
-    store: StateStore,
+    store: StateStore | None,
     state: FrontierState,
     link_graph,
     n_rounds: int,
     checkpoint_every: int = 1,
     **round_kwargs,
-) -> FrontierState:
-    """Drive ``n_rounds`` supersteps, committing through the StateStore
-    seam every ``checkpoint_every`` rounds — the production loop shape:
-    localCheckpoint truncates lineage within the window (frontier_round),
-    the store commit is the durable cut at the window boundary."""
-    committed_round = None
-    for _ in range(n_rounds):
+) -> Iterator[tuple[FrontierState, DataFrame, dict]]:
+    """The crawl loop: ``n_rounds`` supersteps from ``state``, yielding
+    ``(state, scheduled, metrics)`` after each one — the production loop
+    shape: localCheckpoint truncates lineage within the window
+    (frontier_round), the store commit is the durable cut at the window
+    boundary.
+
+    Once the caller resumes the generator, the round is committed through
+    the StateStore seam if it falls on a ``checkpoint_every`` boundary or
+    is the last one (with the tail uncommitted, a resume from the store
+    would silently replay it). ``metrics`` is the commit marker's payload:
+    the caller fills it in (e.g. the number of URLs it wrote out) so the
+    marker records what the round did without another Spark job. A
+    caller that stops iterating early leaves its last round uncommitted.
+    ``store=None`` crawls without persisting."""
+    for i in range(n_rounds):
         state, scheduled = frontier_round(spark, state, link_graph, **round_kwargs)
-        if state.round_no % checkpoint_every == 0:
-            n_sched = scheduled.count()
-            store.commit_round(state, metrics={"scheduled": n_sched})
-            committed_round = state.round_no
-    # commit the tail: with n_rounds not a multiple of checkpoint_every
-    # the final round(s) would otherwise exist only in memory, and a
-    # resume from the store would silently replay them
-    if committed_round != state.round_no:
-        store.commit_round(state, metrics={"final": True})
-    return state
+        metrics: dict = {}
+        yield state, scheduled, metrics
+        last = i == n_rounds - 1
+        if store is not None and (state.round_no % checkpoint_every == 0 or last):
+            store.commit_round(state, metrics=metrics)

@@ -16,7 +16,9 @@ frontier/seen.py) runs once, on the discoveries, where it filters:
 Everything is DataFrame ops; the only Python is the canonicalizer UDF
 over newly discovered links (and the filter tier's blob build and test).
 The crawl loop is iterative batch (SURVEY §2.9): supersteps with
-checkpointed state, not Structured Streaming.
+checkpointed state, not Structured Streaming. Each round cuts lineage
+with ``localCheckpoint``; ``statestore.run_crawl`` drives the rounds and
+commits them through a ``StateStore`` for durable resume.
 
 The fetch itself is abstracted as a ``fetcher`` that maps scheduled URLs
 to outlinks — in production a vectorized HTTP fetch inside mapInPandas
@@ -47,6 +49,12 @@ FRONTIER_SCHEMA = T.StructType(
     ]
 )
 SEEN_SCHEMA = T.StructType([T.StructField("url", T.StringType(), False)])
+# a discovered URL's priority is its best parent's times this (oracle's
+# simulate_crawl default)
+DEPTH_DECAY = 0.5
+# hash partitions of the seen ∪ pending set the bloom/cuckoo tier builds
+# one blob each for
+BLOOM_PARTITIONS = 16
 
 
 @dataclass
@@ -58,7 +66,13 @@ class FrontierState:
 
 def init_frontier(spark: SparkSession, seeds: DataFrame) -> FrontierState:
     """seeds(url, priority) → round-0 state. Seed URLs are canonicalized;
-    duplicates collapse keeping the max priority (set semantics)."""
+    duplicates collapse keeping the max priority (set semantics).
+
+    ``pending`` is cut like every later round's (there eagerly, here
+    lazily, so the first action of round 0 fills it): round 0 has three
+    consumers of it (schedule, ``seen ∪ pending``, ``pending ∖
+    scheduled``), and without the cut each one re-ran the seed
+    canonicalizer and the groupBy."""
     pending = (
         seeds.select(canonicalize_url(F.col("url")).alias("url"), F.col("priority"))
         .filter(F.col("url").isNotNull())
@@ -67,6 +81,7 @@ def init_frontier(spark: SparkSession, seeds: DataFrame) -> FrontierState:
         .withColumn("host", url_host_canonical(F.col("url")))
         .withColumn("depth", F.lit(0))
         .select([f.name for f in FRONTIER_SCHEMA.fields])
+        .localCheckpoint(eager=False)
     )
     seen = spark.createDataFrame([], SEEN_SCHEMA)
     return FrontierState(pending=pending, seen=seen, round_no=0)
@@ -85,11 +100,8 @@ def frontier_round(
     traps: DataFrame | None = None,  # detect_traps() output
     trap_keep: int | None = None,  # None = drop trapped hosts entirely
     default_budget: int = 2,
-    depth_decay: float = 0.5,
     use_bloom: bool | str = False,  # False | True (bloom) | "cuckoo"
-    bloom_partitions: int = 16,
     salt_buckets: int = 0,
-    materialize: bool = True,
 ) -> tuple[FrontierState, DataFrame]:
     """Run one superstep; returns (new_state, scheduled).
 
@@ -100,12 +112,12 @@ def frontier_round(
     returned state does too. ``use_bloom`` (False = exact | True = bloom |
     "cuckoo") picks the filter tier of the discovery gate.
 
-    ``materialize`` truncates lineage each round (localCheckpoint): an
-    iterative job whose state stays lazy re-executes EVERY prior round's
-    joins on each action and the plan grows without bound. In production
-    the per-round Iceberg checkpoint (frontier/checkpoint.py) provides the
-    same cut; localCheckpoint is the in-memory equivalent between
-    durable checkpoints.
+    Every round truncates lineage (localCheckpoint of the schedule and of
+    the new state): an iterative job whose state stays lazy re-executes
+    EVERY prior round's joins on each action and the plan grows without
+    bound. In production the StateStore commit (statestore.run_crawl)
+    provides the same cut durably; localCheckpoint is the in-memory
+    equivalent between commits.
     """
     pending = candidates = state.pending
     if blocklist is not None or block_patterns:
@@ -140,10 +152,9 @@ def frontier_round(
     scheduled = schedule_per_host(
         candidates, politeness, default_budget, salt_buckets
     )
-    if materialize:
-        # cut here too: everything downstream (seen', discoveries, pending')
-        # reuses the scheduled set — don't recompute the gate+rank per branch
-        scheduled = scheduled.localCheckpoint(eager=True)
+    # cut here too: everything downstream (seen', discoveries, pending')
+    # reuses the scheduled set — don't recompute the gate+rank per branch
+    scheduled = scheduled.localCheckpoint(eager=True)
 
     sched_urls = scheduled.select("url", "priority", "depth")
     # disjoint union, no distinct: scheduled ⊆ pending, one row per url
@@ -157,7 +168,7 @@ def frontier_round(
         sched_urls.join(out_edges, "url", "inner")
         .select(
             F.explode("outlinks").alias("raw_url"),
-            (F.col("priority") * F.lit(depth_decay)).alias("priority"),
+            (F.col("priority") * F.lit(DEPTH_DECAY)).alias("priority"),
             (F.col("depth") + 1).alias("depth"),
         )
         .withColumn("url", canonicalize_url(F.col("raw_url")))
@@ -173,8 +184,8 @@ def frontier_round(
         if use_bloom == "cuckoo"
         else (build_seen_filters, filter_unseen)
     )
-    filters = build(known, n_partitions=bloom_partitions) if use_bloom else None
-    discoveries = gate(discoveries, known, filters, bloom_partitions)
+    filters = build(known, n_partitions=BLOOM_PARTITIONS) if use_bloom else None
+    discoveries = gate(discoveries, known, filters, BLOOM_PARTITIONS)
     discoveries = discoveries.withColumn(
         "host", url_host_canonical(F.col("url"))
     ).select([f.name for f in FRONTIER_SCHEMA.fields])
@@ -183,11 +194,12 @@ def frontier_round(
         .select([f.name for f in FRONTIER_SCHEMA.fields])
         .unionByName(discoveries)
     )
-    if materialize:
-        new_pending = new_pending.localCheckpoint(eager=True)
-        new_seen = new_seen.localCheckpoint(eager=True)
     return (
-        FrontierState(pending=new_pending, seen=new_seen, round_no=state.round_no + 1),
+        FrontierState(
+            pending=new_pending.localCheckpoint(eager=True),
+            seen=new_seen.localCheckpoint(eager=True),
+            round_no=state.round_no + 1,
+        ),
         scheduled,
     )
 
@@ -198,6 +210,6 @@ def scheduled_order(scheduled: DataFrame) -> list[str]:
     WARNING: test/CLI helper only — collects the round's schedule to the
     driver (O(scheduled rows) driver memory). Production consumers keep
     the schedule distributed: fetch via sources/fetch.fetch_pages, persist
-    via the checkpoint writer."""
+    via a StateStore (statestore.run_crawl)."""
     rows = scheduled.select("host", "host_rank", "url").collect()
     return [r["url"] for r in sorted(rows, key=lambda r: (r["host"], r["host_rank"]))]

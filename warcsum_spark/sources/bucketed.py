@@ -14,8 +14,8 @@ lives in the catalog, not the files). The sandbox uses the session's
 in-memory catalog + local warehouse; in production the same call
 against an Iceberg/Hive catalog gives durable bucket metadata, and
 Iceberg's ``bucket(N, col)`` partition transform is the equivalent
-declaration (checkpoint.py already writes the host-hash directory
-variant). Bucket counts must match between join sides — pick the
+declaration (frontier/statestore.ParquetDirectoryStore already writes
+the host-hash directory variant). Bucket counts must match between join sides — pick the
 production N once (e.g. 4096 for 10^10 URLs ≈ 2.4M rows/bucket) and
 standardize."""
 
