@@ -305,6 +305,29 @@ def test_newest_round_ignores_stray_names(spark, tmp_path):
     assert ParquetDirectoryStore(spark, str(root)).newest_round() == 3
 
 
+def test_checkpoint_resume_equals_uninterrupted(spark, tmp_path):
+    """A state committed by hand after plain frontier_round calls (not
+    through run_crawl) resumes into the simulator's later rounds."""
+    from warcsum_spark.frontier.statestore import ParquetDirectoryStore
+
+    (seeds, link_graph, budgets, robots, seeds_df, lg_df, pol_df, robots_df) = _fixture_dfs(spark)
+    sim = simulate_crawl(seeds, link_graph, budgets, robots, rounds=4)
+
+    store = ParquetDirectoryStore(spark, str(tmp_path / "ckpt"))
+    state = init_frontier(spark, seeds_df)
+    for _ in range(2):
+        state, _s = frontier_round(spark, state, lg_df, robots=robots_df, politeness=pol_df)
+    store.commit_round(state, metrics={"n": 2})
+
+    resumed = store.load()
+    assert resumed.round_no == 2
+    for rnd in (2, 3):
+        resumed, scheduled = frontier_round(
+            spark, resumed, lg_df, robots=robots_df, politeness=pol_df
+        )
+        assert scheduled_order(scheduled) == sim.scheduled_per_round[rnd], f"round {rnd}"
+
+
 def test_checkpoint_host_hash_bucketed_layout(spark, tmp_path):
     """host_hash_buckets writes a host_bucket=N partitioned layout
     (north_rule frontier-by-host-hash) and resume drops the layout column
