@@ -1,14 +1,14 @@
-"""Benchmark runner (driver contract + scaling protocol).
+"""Benchmark runner for the headline query suite (driver contract).
 
 Default mode: run the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and print ONE JSON
 line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-``--scaling`` mode: run the same job at local[8] and local[32] on identical
-input and write throughput + efficiency to BENCH/BASELINE.md — the sandbox
-stand-in for BASELINE.json's N→4N executor criterion (no real cluster
-here; see BASELINE.md "Sandbox measurement protocol").
+``--scale-suite`` mode: the same suite at sf0.1 and at an amplified input
+(see ``run_scale_suite``). Core-count scaling (local[1] vs local[N]) is
+measured by ``perfbench/run.py --cores N`` on the oracle-checked
+``warc_dedup`` and ``frontier_crawl`` workloads; see BENCH/BASELINE.md.
 
 Each query is forced end-to-end with the noop sink (full execution, no
 driver collect). Timing excludes session startup; a warmup query primes
@@ -94,9 +94,8 @@ def main() -> None:
     cpus = default_cores()
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
 
-    if "--scaling" in sys.argv:
-        run_scaling(sf_dir)
-        return
+    if sys.argv[1:] not in ([], ["--scale-suite"]):
+        sys.exit(f"usage: {sys.argv[0]} [--scale-suite]")
     if "--scale-suite" in sys.argv:
         run_scale_suite(sf_dir, cpus)
         return
@@ -381,399 +380,6 @@ def _write_scale_suite_md(repo) -> None:
         md = md.rstrip() + "\n\n" + block + "\n"
     with open(path, "w") as f:
         f.write(md)
-
-
-SCALE_BASE_ROWS = 20_000
-# Amplified JVM-side → 4M distinct rows. Each stage must run tens of
-# core-seconds: short stages measure task scheduling overhead, not the
-# engine, and can't evidence N→4N scaling. (8M rows was tried and hits a
-# superlinear slowdown in the map stage — stick to 4M.)
-SCALE_REPS = 200
-# This box is multi-tenant with bursty external load (observed idle
-# loadavg spikes of 5-20); a single timing is a lottery. Repeat each stage
-# and keep the minimum (the standard noise-robust estimator), and run each
-# parallelism level as its own invocation (--level) so one burst can't
-# poison the whole protocol.
-SCALE_TRIALS = 3
-
-
-def _scaling_input(spark, workdir: str) -> str:
-    """Deterministic web_pages-shaped input, written once via Spark into 64
-    files so both parallelism levels read identical, well-split data."""
-    from pyspark.sql import functions as F
-
-    from warcsum_spark.fixtures import gen_web_pages
-
-    out = os.path.join(workdir, "web_pages_scaling")
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    rows = gen_web_pages(SCALE_BASE_ROWS, seed=42)
-    pdf = [(r["url"], r["html"], r["lang"]) for r in rows]
-    df = spark.createDataFrame(pdf, "url string, html binary, lang string")
-    df.repartition(64).write.mode("overwrite").parquet(out)
-    return out
-
-
-def _scaling_job(spark, input_path: str) -> dict[str, float]:
-    """The engine metric job (BASELINE.json): WARC digests computed +
-    frontier URLs scheduled. Amplifies the base table ×SCALE_REPS with
-    JVM expressions (deterministic), then runs:
-      digest  — md5+sha1+sha256 over per-rep payload bytes + manifest projection
-      dedup   — collision resolution (fingerprint mode) on truncated digests
-      frontier— canonicalize (Arrow UDF) → seen anti-join → politeness top-k
-    """
-    from pyspark.sql import functions as F
-
-    from warcsum_spark.frontier.politeness import schedule_per_host
-    from warcsum_spark.frontier.seen import filter_unseen
-    from warcsum_spark.functions.urls import canonicalize_url, url_host_canonical
-    from warcsum_spark.operators.collres import resolve_collisions
-
-    pages = spark.read.parquet(input_path)
-    # The scan bin-packs 64 small files into ~3 input partitions
-    # (maxPartitionBytes), which would cap the amplify+hash map stage at 3
-    # cores. Redistribute the 20k base rows (trivial shuffle) so the ×REPS
-    # explode work runs 128-wide at every level.
-    pages = pages.repartition(128)
-    amplified = pages.withColumn(
-        "rep", F.explode(F.sequence(F.lit(0), F.lit(SCALE_REPS - 1)))
-    ).withColumn(
-        "payload", F.concat(F.col("html"), F.encode(F.col("rep").cast("string"), "UTF-8"))
-    ).withColumn("uri", F.concat_ws("/", "url", F.col("rep").cast("string")))
-
-    def digest_stage():
-        _force(
-            amplified.select(
-                "uri",
-                F.md5("payload").alias("md5"),
-                F.sha1("payload").alias("sha1"),
-                F.sha2("payload", 256).alias("sha256"),
-                F.length("payload").alias("length"),
-            )
-        )
-
-    def dedup_stage():
-        manifest = amplified.select(
-            F.lit("bench").alias("warcfile"),
-            F.monotonically_increasing_id().alias("offset"),
-            F.length("payload").alias("length"),
-            F.col("uri"),
-            F.lit("-").alias("date"),
-            F.substring(F.sha1("payload"), 1, 6).alias("digest"),
-            F.col("payload"),
-        )
-        _force(resolve_collisions(manifest, content_key="fingerprint"))
-
-    def frontier_stage():
-        cand = amplified.select(
-            canonicalize_url(F.col("uri")).alias("url"),
-            (F.pmod(F.xxhash64("uri"), F.lit(1000)) / 1000.0).alias("priority"),
-            F.col("rep"),
-        ).filter(F.col("url").isNotNull()).withColumn(
-            "host", url_host_canonical(F.col("url"))
-        )
-        # materialize once (as the real superstep does between rounds) so
-        # the canonicalizer isn't re-run per consumer branch
-        cand = cand.localCheckpoint(eager=True)
-        seen = cand.filter(F.col("rep") % 2 == 0).select("url")
-        unseen = filter_unseen(cand, seen)  # hash-first exact anti-join
-        # salted two-phase top-k (R7): the input's Zipf-skewed hosts put the
-        # hottest host's full candidate list in ONE window task — invisible
-        # at 2 cores (everything queues anyway) but a straggler that caps
-        # scaling at 8+ (measured 44.9 s → 16.8 s at local[8])
-        _force(
-            schedule_per_host(
-                unseen, politeness=None, default_budget=50, salt_buckets=16
-            )
-        )
-        cand.unpersist(blocking=True)  # don't let checkpoint blocks pile up
-
-    stages = (
-        ("digest", digest_stage),
-        ("dedup", dedup_stage),
-        ("frontier", frontier_stage),
-    )
-    times: dict[str, float] = {n: float("inf") for n, _ in stages}
-    loads: dict[str, list] = {n: [] for n, _ in stages}
-    # full cycles rather than per-stage trial bursts: a co-tenant load spike
-    # then poisons one cycle, not every trial of one stage
-    for _ in range(SCALE_TRIALS):
-        for name, stage in stages:
-            t0 = time.perf_counter()
-            stage()
-            times[name] = min(times[name], time.perf_counter() - t0)
-            loads[name].append(round(os.getloadavg()[0], 1))
-    return {n: round(t, 3) for n, t in times.items()}, loads
-
-
-def _hw_probe(workers: int, seconds: float = 3.0) -> tuple[float, float]:
-    """Delivered (L1-resident sha256 hashes/s, memory-stream GB/s) of
-    `workers` raw processes right now. Two ceilings matter: CPU (the hash
-    probe) and the shared memory bus (the stream probe) — byte-heavy
-    engine stages are bounded by the latter, which on THIS box saturates
-    near 8 workers (~60-70 GB/s). Engine scaling is judged against what
-    the box physically delivers at measurement time, not an ideal 4×."""
-    import hashlib
-    import multiprocessing as mp
-
-    import numpy as np
-
-    def burn_hash(q):
-        h = b"x" * 4096
-        n = 0
-        t_end = time.time() + seconds
-        while time.time() < t_end:
-            hashlib.sha256(h).digest()
-            n += 1
-        q.put(n)
-
-    def burn_mem(q):
-        arr = np.frombuffer(np.random.bytes(128 * 1024 * 1024), dtype=np.int64)
-        n = 0
-        t_end = time.time() + seconds
-        s = 0
-        while time.time() < t_end:
-            s += int(arr.sum())
-            n += 1
-        q.put(n)
-
-    rates = []
-    for fn, unit in ((burn_hash, 1.0), (burn_mem, 0.128)):
-        q = mp.Queue()
-        ps = [mp.Process(target=fn, args=(q,)) for _ in range(workers)]
-        for p in ps:
-            p.start()
-        total = sum(q.get() for _ in ps)
-        for p in ps:
-            p.join()
-        rates.append(total * unit / seconds)
-    return rates[0], rates[1]
-
-
-def _pin_cpus(cores: int) -> None:
-    """Confine this process tree to exactly `cores` physical CPUs.
-
-    ``local[N]`` alone is NOT a faithful N-core executor: the JVM sizes GC
-    threads, shuffle/IO pools and codegen compilers to the 32-core box, and
-    Arrow Python workers run on whatever cores are free — so an unpinned
-    local[2] borrows 30 idle cores' worth of ambient capacity, inflating
-    the small-N baseline and deflating measured N→4N efficiency. Pinning
-    before the JVM/probe processes are spawned makes every descendant
-    (JVM threads, Python workers, hw probes) share the N cores, exactly as
-    an N-core executor container would (cgroup cpuset semantics). The box
-    has 32 uniform physical cores (no SMT), so {0..N-1} is an unbiased
-    choice."""
-    avail = os.cpu_count() or 1
-    if cores < avail:
-        os.sched_setaffinity(0, set(range(cores)))
-    else:
-        os.sched_setaffinity(0, set(range(avail)))
-
-
-def _run_level(cores: int, workdir: str) -> dict:
-    from pyspark.sql import SparkSession
-
-    n_rows = SCALE_BASE_ROWS * SCALE_REPS
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    _pin_cpus(cores)
-    hash_rate, mem_gbs = _hw_probe(cores)
-    spark = _session(cores, 4 * cores)
-    input_path = _scaling_input(spark, workdir)
-    times, loads = _scaling_job(spark, input_path)  # trial 1 = warmup
-    total = sum(times.values())
-    result = {
-        "cores": cores,
-        "reps": SCALE_REPS,
-        "hw_hash_rate": round(hash_rate, 0),
-        "hw_mem_gbs": round(mem_gbs, 1),
-        "times": times,
-        "loads": loads,
-        "total_sec": round(total, 3),
-        "rows_per_sec": round(n_rows / total, 1),
-        "digests_per_sec": round(3 * n_rows / times["digest"], 1),
-        "urls_scheduled_per_sec": round(n_rows / 2 / times["frontier"], 1),
-    }
-    spark.stop()
-    return result
-
-
-def run_scaling(sf_dir: str) -> None:
-    """Engine-metric job at two parallelism levels → throughput + efficiency
-    (sandbox stand-in for BASELINE.json's N→4N executor criterion).
-
-    Modes:
-      --scaling                 run both levels then report
-      --scaling --level N       run one level, save BENCH/scaling_N.json
-      --scaling --merge         merge saved level files into the report
-    A saved level file is reused by --merge, and by a full run if the
-    matching level crashes; each level in its own process/invocation keeps
-    one co-tenant load burst from poisoning the whole protocol.
-    """
-    import tempfile
-
-    workdir = os.environ.get("WARCSUM_BENCH_DIR") or tempfile.mkdtemp(
-        prefix="warcsum_bench_"
-    )
-    os.makedirs("BENCH", exist_ok=True)
-    n_rows = SCALE_BASE_ROWS * SCALE_REPS
-
-    level = None
-    if "--level" in sys.argv:
-        level = int(sys.argv[sys.argv.index("--level") + 1])
-    merge_only = "--merge" in sys.argv
-
-    if level is not None:
-        result = _run_level(level, workdir)
-        path = f"BENCH/scaling_{level}.json"
-        # merge-min with any prior run of this level: ambient co-tenant load
-        # fluctuates >3×, so the best observation across sessions is the
-        # closest to the engine's true cost
-        if os.path.exists(path):
-            with open(path) as f:
-                prev = json.load(f)
-            if prev.get("times") and prev.get("reps") == SCALE_REPS:
-                for k, v in prev["times"].items():
-                    if k in result["times"] and v < result["times"][k]:
-                        result["times"][k] = v
-                        result["loads"][k] = prev["loads"].get(k, [])
-                result["hw_hash_rate"] = max(
-                    result.get("hw_hash_rate", 0), prev.get("hw_hash_rate", 0)
-                )
-                result["hw_mem_gbs"] = max(
-                    result.get("hw_mem_gbs", 0), prev.get("hw_mem_gbs", 0)
-                )
-                total = sum(result["times"].values())
-                result["total_sec"] = round(total, 3)
-                result["rows_per_sec"] = round(n_rows / total, 1)
-                result["digests_per_sec"] = round(3 * n_rows / result["times"]["digest"], 1)
-                result["urls_scheduled_per_sec"] = round(
-                    n_rows / 2 / result["times"]["frontier"], 1
-                )
-        with open(path, "w") as f:
-            json.dump(result, f, indent=1)
-        print(json.dumps({"level": level, **{k: result[k] for k in ("total_sec", "rows_per_sec")}}))
-        return
-
-    levels = [
-        int(x)
-        for x in os.environ.get("WARCSUM_SCALE_LEVELS", "2,8,32").split(",")
-    ]
-    results = {}
-    for cores in levels:
-        path = f"BENCH/scaling_{cores}.json"
-        if not merge_only:
-            # each level in its OWN process: py4j keeps the first level's
-            # JVM (and its CPU affinity) alive in-process, so a same-process
-            # second level would run partly unpinned
-            import subprocess
-
-            subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--scaling",
-                 "--level", str(cores)],
-                check=True,
-                env={**os.environ, "WARCSUM_BENCH_DIR": workdir},
-            )
-        if os.path.exists(path):
-            with open(path) as f:
-                results[cores] = json.load(f)
-    pairs = [(n, 4 * n) for n in levels if n in results and 4 * n in results]
-    effs = {}
-    for n, n4 in pairs:
-        raw = (results[n]["total_sec"] / results[n4]["total_sec"]) / 4.0
-        bw = None
-        if results[n].get("hw_mem_gbs") and results[n4].get("hw_mem_gbs"):
-            bw = results[n4]["hw_mem_gbs"] / results[n]["hw_mem_gbs"]
-        effs[(n, n4)] = (raw, bw)
-
-    # hand-written analysis sections (e.g. the 8→32 attribution) live
-    # below this marker and survive report regeneration
-    manual_marker = "<!-- manual sections below: preserved across rewrites -->"
-    manual_tail = ""
-    try:
-        with open("BENCH/BASELINE.md") as f:
-            prev_md = f.read()
-        if manual_marker in prev_md:
-            manual_tail = prev_md.split(manual_marker, 1)[1]
-    except OSError:
-        pass
-
-    with open("BENCH/BASELINE.md", "w") as f:
-        f.write("# BENCH/BASELINE — scaling protocol results\n\n")
-        f.write(
-            f"Input: deterministic synthetic web_pages, {SCALE_BASE_ROWS} base "
-            f"rows × {SCALE_REPS} JVM-side reps = {n_rows} rows (Zipf-skewed "
-            "hosts, ~KB payloads), 64 parquet files.\n"
-            "Job = BASELINE.json engine metric: payload digests (md5+sha1+"
-            "sha256) + collision-resolution dedup + frontier round "
-            "(canonicalize → seen anti-join → per-host politeness top-k).\n"
-            "Same job, identical input, at N vs 4N local cores — the sandbox "
-            "stand-in for the N→4N executor criterion (target ≥ 0.8). "
-            f"Per-stage time = min of {SCALE_TRIALS} trials, merge-min across "
-            "runs (multi-tenant host; min is the noise-robust estimator).\n\n"
-            "**Protocol**: each level runs in its own process with the whole "
-            "process tree pinned to exactly N cores (`sched_setaffinity`, "
-            "inherited by the JVM, its GC/JIT threads, and the Arrow Python "
-            "workers) — the same confinement a cpuset'd N-core executor "
-            "container gives. Without pinning, `local[2]` borrows the box's "
-            "30 idle cores for GC/IO/Python work, inflating the small-N "
-            "baseline and understating efficiency. The hw columns are "
-            "delivered raw-process capability measured under the same "
-            "pinning immediately before each level. Caveat read the other "
-            "way: the local[32] level is pinned to EVERY core, so it — "
-            "unlike the 2- and 8-core levels — absorbs 100% of the box's "
-            "ambient co-tenant load (see per-trial loadavg), which "
-            "understates the 8→32 pair; 2→8 is the graded pair.\n\n"
-        )
-        f.write(
-            "| level | total sec | rows/sec | digests/sec | URLs sched/sec |"
-            " hw hash/s | hw mem GB/s |\n|---|---|---|---|---|---|---|\n"
-        )
-        for cores in sorted(results):
-            r = results[cores]
-            f.write(
-                f"| local[{cores}] | {r['total_sec']} | {r['rows_per_sec']} | "
-                f"{r['digests_per_sec']} | {r['urls_scheduled_per_sec']} | "
-                f"{r.get('hw_hash_rate', '-')} | {r.get('hw_mem_gbs', '-')} |\n"
-            )
-        f.write("\n")
-        for (n, n4), (raw, bw) in effs.items():
-            f.write(
-                f"**Scaling efficiency local[{n}]→local[{n4}]: (T{n}/T{n4})/4 "
-                f"= {raw:.3f}**"
-            )
-            if bw is not None:
-                f.write(
-                    f" (delivered memory-bandwidth ratio at measurement time: "
-                    f"{bw:.2f}×; efficiency vs delivered bandwidth "
-                    f"= {min(raw * 4 / bw, 9.999):.3f})"
-                )
-            f.write("\n\n")
-        f.write(
-            "Per-stage seconds (min across trials/runs; 1-min loadavg per "
-            "trial in brackets — ambient co-tenant load):\n\n| stage | "
-            + " | ".join(f"local[{c}]" for c in sorted(results))
-            + " |\n|---" + "|---" * len(results) + "|\n"
-        )
-        for name in ("digest", "dedup", "frontier"):
-            f.write(
-                f"| {name} | "
-                + " | ".join(
-                    f"{results[c]['times'][name]} {results[c]['loads'][name]}"
-                    for c in sorted(results)
-                )
-                + " |\n"
-            )
-        f.write("\n" + manual_marker + manual_tail)
-    out = {}
-    for (n, n4), (raw, bw) in effs.items():
-        out[f"scaling_efficiency_{n}_to_{n4}"] = round(raw, 3)
-        if bw:
-            out[f"bw_ratio_{n}_to_{n4}"] = round(bw, 2)
-    for c in sorted(results):
-        out[f"local{c}_total_sec"] = results[c]["total_sec"]
-    print(json.dumps(out))
 
 
 if __name__ == "__main__":

@@ -52,6 +52,43 @@ def test_cli_dedup_and_split_roundtrip(spark, tmp_path, capsys):
     assert sorted(split_lines) == sorted(expect_m)
 
 
+def test_cli_manifest_append_keeps_both_runs(spark, tmp_path):
+    """manifest -a (warcsum.1's append flag) twice into one directory:
+    the directory then holds every oracle line twice."""
+    d = _archives(tmp_path)
+    out = str(tmp_path / "manifest_out")
+    for _ in range(2):
+        assert main(["manifest", d, "-H", "sha1", "-a", "-o", out]) == 0
+    got = [l for l in spark.read.text(out).toPandas()["value"] if l]
+    paths = sorted(glob.glob(os.path.join(d, "**", "*.warc.gz"), recursive=True))
+    expect = manifest_lines(oracle_manifest(paths, algo="sha1", force=True))
+    assert sorted(got) == sorted(expect * 2)
+
+
+def test_cli_split_to_dir_keeps_clusters_whole(spark, tmp_path):
+    """split -n 3 -o DIR (warcsumsplit.1): the part files together hold
+    the manifest, and no digest appears in two part files."""
+    d = _archives(tmp_path)
+    manifest_dir = str(tmp_path / "manifest_out")
+    assert main(["manifest", d, "-H", "sha1", "-o", manifest_dir]) == 0
+    out = str(tmp_path / "split_out")
+    assert main(["split", manifest_dir, "-n", "3", "-o", out]) == 0
+    parts = sorted(glob.glob(os.path.join(out, "part-*")))
+    lines_per_part = []
+    for part in parts:
+        with open(part, encoding="utf-8") as f:
+            lines_per_part.append([l for l in f.read().splitlines() if l])
+    paths = sorted(glob.glob(os.path.join(d, "**", "*.warc.gz"), recursive=True))
+    expect = manifest_lines(oracle_manifest(paths, algo="sha1"))
+    assert sorted(l for lines in lines_per_part for l in lines) == sorted(expect)
+    owner: dict[str, int] = {}
+    for i, lines in enumerate(lines_per_part):
+        for line in lines:
+            digest = line.split(" ")[5]
+            assert owner.setdefault(digest, i) == i, f"{digest} in two parts"
+    assert len(set(owner.values())) > 1  # the split really splits
+
+
 def _crawl_inputs(spark, tmp_path):
     """The frontier fixture as crawl command inputs: (fixture, seeds text
     file, link-graph, politeness and robots parquet paths)."""
@@ -234,6 +271,69 @@ def test_cli_crawl_checkpoint_resumes_like_simulator(spark, tmp_path, capsys):
             politeness=spark.read.parquet(pol_path),
         )
         assert scheduled_order(scheduled) == sim.scheduled_per_round[rnd], rnd
+
+
+def test_cli_crawl_parquet_branch_runs_no_more_jobs_than_stdout(
+    spark, tmp_path, capsys
+):
+    """-o DIR counts each round's schedule on its own write, so it runs no
+    more jobs than -o -, whose one collect both prints and counts. Both
+    schedule what the simulator does, and both commit markers record the
+    same ``scheduled`` counts."""
+    import json
+
+    from warcsum_spark.frontier.superstep import scheduled_order
+
+    fixture, seeds_txt, lg_path, pol_path, rob_path = _crawl_inputs(spark, tmp_path)
+    seeds, link_graph, budgets, robots = fixture
+    sim = simulate_crawl(seeds, link_graph, budgets, robots, rounds=2)
+    sc = spark.sparkContext
+    jobs, markers = {}, {}
+    for branch in ("stdout", "parquet"):
+        output = "-" if branch == "stdout" else str(tmp_path / "sched")
+        ckpt = str(tmp_path / f"ckpt_{branch}")
+        group = f"cli-crawl-{branch}"
+        sc.setJobGroup(group, group)
+        try:
+            rc = main(
+                [
+                    "crawl",
+                    "--seeds", seeds_txt,
+                    "--link-graph", lg_path,
+                    "--robots", rob_path,
+                    "--politeness", pol_path,
+                    "--rounds", "2",
+                    "--checkpoint", ckpt,
+                    "-o", output,
+                ]
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rc == 0
+        jobs[branch] = len(sc.statusTracker().getJobIdsForGroup(group))
+        captured = capsys.readouterr()
+        if branch == "stdout":
+            got: dict[int, list[str]] = {}
+            for line in captured.out.splitlines():
+                if line:
+                    rnd, url = line.split(" ", 1)
+                    got.setdefault(int(rnd), []).append(url)
+        else:
+            got = {
+                rnd: scheduled_order(
+                    spark.read.parquet(f"{output}/scheduled_round_{rnd:06d}")
+                )
+                for rnd in range(2)
+            }
+        for rnd in range(2):
+            assert got.get(rnd, []) == sim.scheduled_per_round[rnd], (branch, rnd)
+        markers[branch] = []
+        for k in (1, 2):
+            with open(os.path.join(ckpt, f"round_{k:06d}", "_COMMIT")) as f:
+                markers[branch].append(json.load(f)["metrics"]["scheduled"])
+    assert markers["parquet"] == markers["stdout"]
+    assert markers["stdout"] == [len(r) for r in sim.scheduled_per_round]
+    assert jobs["parquet"] <= jobs["stdout"], jobs
 
 
 def test_cli_cdx_matches_oracle(spark, tmp_path, capsys):

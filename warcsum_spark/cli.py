@@ -30,7 +30,7 @@ import argparse
 import json
 import sys
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -196,12 +196,15 @@ def _cmd_crawl(args: argparse.Namespace) -> int:
                 print(f"{rnd} {u}")
             metrics["scheduled"] = len(order)
         else:
-            scheduled.select("host", "host_rank", "url").write.mode(
-                "overwrite"
-            ).parquet(f"{args.output}/scheduled_round_{rnd:06d}")
-            # metrics count over the already-localCheckpointed frame —
-            # no rows cross to the driver in parquet mode
-            metrics["scheduled"] = scheduled.count()
+            # the write counts its own rows (an observed metric): no second
+            # job over the frame, and no rows cross to the driver
+            written = Observation()
+            scheduled.select("host", "host_rank", "url").observe(
+                written, F.count(F.lit(1)).alias("n")
+            ).write.mode("overwrite").parquet(
+                f"{args.output}/scheduled_round_{rnd:06d}"
+            )
+            metrics["scheduled"] = written.get["n"]
         summary.append({"round": rnd, **metrics})
     print(json.dumps({"rounds": summary}), file=sys.stderr)
     return 0

@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-DEFAULT_SALT_THRESHOLD = 100_000
-
 
 def schedule_per_host(
     candidates: DataFrame,

@@ -55,34 +55,6 @@ def _norm(text: Column) -> Column:
     return F.regexp_replace(s, r"^ +| +$", "")
 
 
-def char_entropy_cols(
-    norm: Column,
-) -> tuple[Column, Column, Column]:
-    """(entropy, n_symbols, distinct_symbols) over the fixed alphabet
-    of an already-normalized string column. entropy is rounded to 6 at
-    output; empty input → (0.0, 0, 0)."""
-    n = F.length(norm)
-    terms = []
-    distinct = []
-    for sym in ALPHABET:
-        c = n - F.length(F.replace(norm, F.lit(sym), F.lit("")))
-        p = c.cast("double") / n.cast("double")
-        terms.append(F.when(c > 0, -p * F.log2(p)).otherwise(F.lit(0.0)))
-        distinct.append(F.when(c > 0, 1).otherwise(0))
-    ent = terms[0]
-    for t in terms[1:]:
-        ent = ent + t
-    dcount = distinct[0]
-    for d in distinct[1:]:
-        dcount = dcount + d
-    entropy = F.when(n > 0, F.round(ent, 6)).otherwise(F.lit(0.0))
-    return (
-        entropy,
-        n.cast("long"),
-        F.when(n > 0, dcount).otherwise(F.lit(0)).cast("long"),
-    )
-
-
 def with_char_entropy(
     df: DataFrame,
     text_col: str = "text",

@@ -44,16 +44,6 @@ ELLIPSIS_LINE_RE = r"(?m)\.\.\.$"
 # preceded by exactly one space after normalization)
 ALPHA_WORD_RE = r" [^ ]*[A-Za-z]"
 
-MEASURE_NAMES = (
-    "n_words",
-    "mean_word_len",
-    "symbol_word_ratio",
-    "bullet_line_frac",
-    "ellipsis_line_frac",
-    "alpha_word_frac",
-    "stopword_hits",
-)
-
 
 def _norm(text: Column) -> Column:
     """Whitespace-normalized text: runs → single space, ends trimmed.

@@ -156,9 +156,6 @@ def stage_repetition_units(
     )
 
 
-_STAGED_COLS = ("_rep_lines", "_rep_paras", "_rep_words")
-
-
 def repetition_measures_staged(
     dup_ns=tuple(DEFAULT_REPETITION_BOUNDS["max_dup_ngram_frac"]),
 ) -> dict[str, Column]:

@@ -129,16 +129,6 @@ def quality_features(text: Column) -> dict[str, Column]:
     }
 
 
-def quality_score(text: Column) -> Column:
-    """Composite [0,1] quality score: length band + punctuation sanity +
-    stopword presence. Deterministic, monotone in the signals."""
-    f = quality_features(text)
-    len_ok = F.least(f["n_tokens"].cast("double") / F.lit(100.0), F.lit(1.0))
-    punct_ok = F.when(f["punct_ratio"].between(0.005, 0.2), 1.0).otherwise(0.3)
-    stop_ok = F.least(f["stopword_ratio"] * F.lit(5.0), F.lit(1.0))
-    return F.round((len_ok + punct_ok + stop_ok) / F.lit(3.0), 6)
-
-
 def md5_fingerprint(text: Column, n_hex: int = 16) -> Column:
     """Exact-content fingerprint: md5 prefix (SQL-reproducible)."""
     return F.substring(F.md5(F.encode(text, "UTF-8")), 1, n_hex)

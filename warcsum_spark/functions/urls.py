@@ -242,15 +242,6 @@ def url_host_canonical(canon_url: Column) -> Column:
     return F.when((sep == 0) | (host == ""), None).otherwise(host)
 
 
-def url_hash(canon_url: Column) -> Column:
-    """murmur3_x86_32(seed 42) of the canonical URL — JVM built-in (R2)."""
-    return F.hash(canon_url)
-
-
-def url_hash64(canon_url: Column) -> Column:
-    return F.xxhash64(canon_url)
-
-
 def url_path_query(canon_url: Column) -> Column:
     """path[?query] part of an already-canonical URL, for robots matching —
     pure JVM expression (regexp), no UDF."""

@@ -151,21 +151,6 @@ def _shingle_hash_array(text_col: str, k: int):
     return acc
 
 
-def hashed_shingles(
-    docs: DataFrame, k: int = 3, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Distinct k-word shingles per doc as 8-byte hashes:
-    (doc_id, shingle_hash). Deduped per-doc BEFORE the explode
-    (array_distinct — shingle sets are per-document, so no global distinct
-    shuffle is needed at all)."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(_shingle_hash_array(text_col, k))).alias(
-            "shingle_hash"
-        ),
-    )
-
-
 _SM_GAMMA = 0x9E3779B97F4A7C15  # splitmix64 constants (public domain, Steele et al.)
 _SM_M1 = 0xBF58476D1CE4E5B9
 _SM_M2 = 0x94D049BB133111EB

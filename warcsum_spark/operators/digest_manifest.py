@@ -69,22 +69,6 @@ def manifest_text(manifest: DataFrame) -> DataFrame:
     )
 
 
-def write_manifest_text(manifest: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S4 text sink — append/overwrite flag parity (warcsum.c:1358–1365)."""
-    manifest_text(manifest).write.mode(mode).text(path)
-
-
-def write_split_manifests(manifest: DataFrame, n: int, path: str) -> None:
-    """Stage 2b parity (warcsumsplit:150–231): split the manifest into n
-    chunks such that no same-digest cluster straddles a chunk. The
-    reference scans a sorted file and nudges byte cut-points past cluster
-    runs; hash partitioning on the digest gives the invariant by
-    construction (tests/test_plan_quality.py asserts it), with the same
-    caveat the reference documents (warcsumsplit:22–24): partitions are
-    approximately, not exactly, equal-sized."""
-    manifest_text(manifest.repartition(n, "digest")).write.mode("overwrite").text(path)
-
-
 def read_manifest_text(spark, path: str) -> DataFrame:
     """S5 manifest text source (warccollres.c:1236–1288): space-delimited
     positional fields with explicit schema — no inference."""

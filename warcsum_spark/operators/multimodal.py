@@ -21,10 +21,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_META_SCHEMA = (
-    "media_id long, kind string, mime string, width int, height int, "
-    "duration_ms int, n_bytes long"
-)
 
 FEATURE_SCHEMA = "media_id long, kind string, feature array<float>, feat_dim int"
 

@@ -43,7 +43,7 @@ from __future__ import annotations
 import hashlib
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -63,30 +63,14 @@ def rp_matrix(
     return rows
 
 
-def _fold_dot(x: Column, weights: list[float]) -> Column:
-    """sequential left-fold dot product against a literal vector —
-    index-order float additions, identical to DuckDB list arithmetic."""
-    w = F.array(*[F.lit(v) for v in weights])
-    return F.aggregate(
-        F.zip_with(x, w, lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _fold_sq(x: Column) -> Column:
-    return F.aggregate(
-        F.transform(x, lambda a: a.cast("double") * a.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _dot_sql(vec_col: str, weights: list[float]) -> str:
-    """``_fold_dot`` as ONE SQL expression string: the Column form costs
-    ~1000 py4j round trips per query build (dim_in literals × dim_out
-    coordinates — ~0.6 s of driver time measured); the parsed tree and
-    the float fold order are identical."""
+    """Sequential left-fold dot product of ``vec_col`` against a literal
+    vector — index-order float additions, identical to DuckDB list
+    arithmetic — as ONE SQL expression string: the equivalent Column form
+    (``F.aggregate`` over ``F.zip_with``) costs ~1000 py4j round trips per
+    query build (dim_in literals × dim_out coordinates — ~0.6 s of driver
+    time measured); the parsed tree and the float fold order are
+    identical."""
     arr = "array(" + ", ".join(f"{v!r}D" for v in weights) + ")"
     return (
         f"aggregate(zip_with(`{vec_col}`, {arr}, (a, b) -> "

@@ -230,27 +230,6 @@ def _with_table_sigs(
     )
 
 
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """n_bits-bit random-hyperplane signature as a long (JVM expressions)."""
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        d = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(float(p)) for p in plane]),
-                lambda x, p: x.cast("double") * p,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        sig = sig.bitwiseOR(
-            F.when(d > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return sig
-
-
 def embedding_near_dup_pairs(
     corpus: DataFrame,
     threshold: float = 0.95,

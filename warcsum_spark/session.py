@@ -189,12 +189,6 @@ def get_spark(
     return spark
 
 
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-
-
 def ensure_min_parallelism(df, target: int | None = None):
     """Round-robin repartition ``df`` up to ``target`` partitions (default
     ``sparkContext.defaultParallelism``) — but ONLY if it currently has

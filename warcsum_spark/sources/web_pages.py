@@ -1,5 +1,6 @@
 """The ``web_pages`` table (input_hint schema: url, warc_ts, html, text,
-lang) — loaders plus the S6/S7 replacements.
+lang) — the S6/S7 replacements: the ``path_index`` mirror lookup loader,
+mirror-URL resolution and payload re-attachment.
 
 Production target is an Iceberg table (`spark.read.table("web_pages")`,
 partition pruning on host-hash buckets, column pruning keeps ``html``
@@ -11,15 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def read_web_pages(spark: SparkSession, path: str) -> DataFrame:
-    """``path`` dispatch: ``table:NAME`` reads a catalog (Iceberg) table,
-    anything else is a parquet directory. One call site to swap when the
-    Iceberg catalog exists."""
-    if path.startswith("table:"):
-        return spark.read.table(path[len("table:"):])
-    return spark.read.parquet(path)
 
 
 def read_path_index(
