@@ -2,7 +2,8 @@
 twin, cash conservation (ΣC = 1 per round up to rounding), the
 dangling virtual-page path, importance ≡ normalized flow, agreement
 with PageRank's ORDER at damping→1 on a strongly connected graph,
-DuckDB twin bit parity, and the Python-free plan contract."""
+DuckDB twin bit parity, rows independent of the partition count, the
+round_scale range, and the Python-free plan contract."""
 
 from __future__ import annotations
 
@@ -111,6 +112,36 @@ def test_duckdb_twin_bit_parity(spark):
         for r in duckdb.connect().execute(sql).fetchall()
     }
     assert got == want  # per-round rounding makes this exact
+
+
+def test_partition_count_does_not_change_rows(spark):
+    # the parity graph: node 0's round-3 cash is an exact rounding tie,
+    # so with float sums the summation order could decide it
+    edges = [(i % 11, (i * i + 1) % 13) for i in range(60)]
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    saved = {k: spark.conf.get(k) for k in keys}
+    rows = {}
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        for parts in (1, 8):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            df = spark.createDataFrame(edges, "src long, dst long")
+            rows[parts] = sorted(
+                tuple(r) for r in opic(df.repartition(parts), iters=4).collect()
+            )
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert rows[1] == rows[8]
+
+
+@pytest.mark.parametrize("rs", [5, 19])
+def test_round_scale_out_of_range_raises(spark, rs):
+    df = spark.createDataFrame([(0, 1)], "src long, dst long")
+    with pytest.raises(ValueError, match="round_scale"):
+        opic(df, round_scale=rs)
+    with pytest.raises(ValueError, match="round_scale"):
+        opic_oracle_sql("SELECT 0 AS src, 1 AS dst", round_scale=rs)
 
 
 def test_plan_python_free(spark):

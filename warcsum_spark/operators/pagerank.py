@@ -10,7 +10,7 @@ a lazy chain would re-expand the whole prior lineage at every of the
 three places the rank frame is consumed (contributions, dangling mass,
 rank base), i.e. O(3^iters) subtrees. The degree-weighted edge list is
 built once and checkpointed; per-iteration shuffles key on node ids
-and carry (node, double) rows only. Dangling-node mass (pages with no
+and carry (node, long share) rows only. Dangling-node mass (pages with no
 outlinks — crawl frontiers are FULL of these: every not-yet-fetched
 leaf) is redistributed uniformly via a one-row broadcast join, never a
 driver collect.
@@ -22,12 +22,22 @@ rounds. PageRank, TrustRank (T79), spam mass (T121: both ranks as two
 columns of ONE loop) and OPIC (operators/opic.py, T100) differ only in
 their per-column start and update expressions, which they pass in.
 
-Engine-portability: ranks are rounded to ``round_scale`` decimals at
-the END of every iteration, which pins the float trajectory bit-for-bit
-across engines — the driver's DuckDB oracle unrolls the same iterations
-as chained CTEs (one pair per round) and must match exactly, not
-approximately. (Without per-round rounding, different summation orders
-drift in the 13th digit and diverge after a few damping multiplies.)
+Engine-portability: mass travels along edges in fixed point. A state
+value on the 10^-rs grid is ``round(v·10^rs)`` units of 10^-rs, scaled
+to units of 10^-FLOW_SCALE (10^-18); each edge carries the half-up
+rounded share ``half_up(units·10^g, outdeg)`` with g = 18 − rs, and the
+in-link and dangling sums are BIGINT sums, which no summation order
+can change. The driver's DuckDB oracle unrolls the same iterations as
+chained CTEs (one group per round) with the same integer expressions.
+A float sum could not give this: on one OPIC graph the exact cash is
+the rounding tie 0.16168094125, Spark's hash aggregation summed it to
+that double and DuckDB to 0.16168094124999996, and each engine's
+``round(·, 10)`` then rounds a tie its own way (Spark half-up on the
+shortest decimal string, DuckDB on the binary value). PageRank and
+TrustRank turn the exact sums into doubles once and still
+``round(·, round_scale)`` the rank each round, so a rank whose exact
+value is such a tie can still round apart; OPIC (opic.py) keeps its
+whole state in integers.
 
 At 10^10 edges: both per-iteration shuffles are hash exchanges on node
 id — the same key every round, so a production run pre-partitions the
@@ -39,6 +49,57 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+# Flowing mass is a BIGINT count of 10^-FLOW_SCALE units: a share of
+# mass 1 is at most 10^18, so its half-up rounding never overflows.
+FLOW_SCALE = 18
+
+
+def _half_up(a, b):
+    """``a / b`` rounded half up, for BIGINT ``a ≥ 0`` and ``b > 0``:
+    ``(a + b div 2) div b``, which equals ``(2a + b) div 2b`` without the
+    doubling of ``a``."""
+    return F.call_function("div", a + F.call_function("div", b, F.lit(2)), b)
+
+
+def _half_up_sql(a: str, b) -> str:
+    """DuckDB twin of ``_half_up``."""
+    return f"((({a}) + ({b}) // 2) // ({b}))"
+
+
+def _grid(round_scale: int) -> tuple[int, int]:
+    """``(10^rs, 10^g)`` with g = FLOW_SCALE − rs: a value on the
+    10^-rs grid is ``units·10^g`` flow units. Raises ``ValueError`` when
+    rs is not in [0, FLOW_SCALE]."""
+    if not 0 <= round_scale <= FLOW_SCALE:
+        raise ValueError(
+            f"round_scale must be in [0, {FLOW_SCALE}], got {round_scale}"
+        )
+    return 10**round_scale, 10 ** (FLOW_SCALE - round_scale)
+
+
+def _grid_units(v, round_scale: int):
+    """The flow units of a double state value on the 10^-rs grid:
+    ``round(v·10^rs)`` (exact for rs ≤ 15) times 10^g."""
+    scale, g = _grid(round_scale)
+    return F.round(v * F.lit(scale)).cast("long") * F.lit(g)
+
+
+def _grid_units_sql(v: str, round_scale: int) -> str:
+    """DuckDB twin of ``_grid_units``."""
+    scale, g = _grid(round_scale)
+    return f"round({v} * {scale})::BIGINT * {g}"
+
+
+def _as_mass(units):
+    """An exact flow sum (10^-FLOW_SCALE units) as one double."""
+    return units.cast("double") / F.lit(float(10**FLOW_SCALE))
+
+
+def _as_mass_sql(units: str) -> str:
+    """DuckDB twin of ``_as_mass``."""
+    return f"{units}::DOUBLE / {float(10**FLOW_SCALE)!r}"
 
 
 def _link_flow(
@@ -95,7 +156,7 @@ def mass_flow(
     marked: DataFrame,
     consts: DataFrame,
     columns: dict,
-    flows: tuple[str, ...],
+    flows: dict,
     iters: int,
 ) -> DataFrame:
     """``iters`` rounds of link-mass flow over ``_link_flow``'s output;
@@ -104,13 +165,18 @@ def mass_flow(
 
     ``columns`` maps each state column to ``(start, step)``: ``start``
     is its round-0 expression over marked ⋈ consts, and ``step(contrib,
-    dm)`` its next value, where ``contrib`` is the column's mass
-    arriving over in-links this round (0.0 when none) and ``dm`` the
-    total mass the dangling nodes held. ``step`` is evaluated over the
-    previous state ⋈ contributions ⋈ dangling mass ⋈ consts, so it may
-    read any previous-state or consts column. Only the columns named in
-    ``flows`` travel along edges, each split evenly over its node's
-    out-links; the step of any other column must ignore ``contrib`` and
+    dm)`` its next value. ``step`` is evaluated over the previous state
+    ⋈ contributions ⋈ dangling mass ⋈ consts, so it may read any
+    previous-state or consts column.
+
+    Only the columns named in ``flows`` travel along edges. ``flows``
+    maps each of them to its mass as a BIGINT count of 10^-FLOW_SCALE
+    units over the state (``_grid_units`` for a double on the 10^-rs
+    grid). Each edge carries ``_half_up(mass, outdeg)``; ``contrib`` is
+    the BIGINT sum of the shares arriving over in-links this round (0
+    when none) and ``dm`` the BIGINT sum of the dangling nodes' mass,
+    both in 10^-FLOW_SCALE units and so the same under any summation
+    order. The step of any other column must ignore ``contrib`` and
     ``dm``.
 
     Each round is ONE edge⋈state join + ONE dst-keyed aggregation
@@ -133,13 +199,19 @@ def mass_flow(
                 e_w.join(state, e_w.src == state.node)
                 .select(
                     F.col("dst").alias("node"),
-                    *[(F.col(c) / F.col("_deg")).alias(f"_c_{c}") for c in flows],
+                    *[
+                        _half_up(m, F.col("_deg")).alias(f"_c_{c}")
+                        for c, m in flows.items()
+                    ],
                 )
                 .groupBy("node")
                 .agg(*[F.sum(f"_c_{c}").alias(f"_contrib_{c}") for c in flows])
             )
             dangling = state.filter(~F.col("_has_out")).agg(
-                *[F.coalesce(F.sum(c), F.lit(0.0)).alias(f"_dm_{c}") for c in flows]
+                *[
+                    F.coalesce(F.sum(m), F.lit(0)).alias(f"_dm_{c}")
+                    for c, m in flows.items()
+                ]
             )
             state = (
                 state.join(contribs, "node", "left")
@@ -149,7 +221,7 @@ def mass_flow(
                     *marked.columns,
                     *[
                         step(
-                            F.coalesce(F.col(f"_contrib_{c}"), F.lit(0.0)),
+                            F.coalesce(F.col(f"_contrib_{c}"), F.lit(0)),
                             F.col(f"_dm_{c}"),
                         ).alias(c)
                         for c, (_, step) in columns.items()
@@ -167,7 +239,7 @@ def _pagerank_column(damping: float, round_scale: int) -> tuple:
     def step(contrib, dm):
         return F.round(
             (1.0 - damping) / F.col("_n")
-            + damping * (contrib + dm / F.col("_n")),
+            + damping * (_as_mass(contrib) + _as_mass(dm) / F.col("_n")),
             round_scale,
         )
 
@@ -186,7 +258,7 @@ def _trustrank_column(damping: float, round_scale: int) -> tuple:
     def step(contrib, dm):
         return F.round(
             (1.0 - damping) * teleport()
-            + damping * (contrib + dm * teleport()),
+            + damping * (_as_mass(contrib) + _as_mass(dm) * teleport()),
             round_scale,
         )
 
@@ -208,7 +280,7 @@ def pagerank(
     ranks = mass_flow(
         *_link_flow(edges, src_col, dst_col),
         {"rank": _pagerank_column(damping, round_scale)},
-        ("rank",),
+        {"rank": _grid_units(F.col("rank"), round_scale)},
         iters,
     )
     return ranks.select("node", "rank")
@@ -222,9 +294,10 @@ def pagerank_oracle_sql(
     final_scale: int = 8,
 ) -> str:
     """The same computation as chained CTEs for DuckDB — one
-    (contrib, rank) pair per unrolled iteration, identical per-round
-    rounding, so the oracle is exact. ``edges_cte`` is a SELECT
-    yielding (src, dst)."""
+    (contrib, dangling, rank) group per unrolled iteration, with
+    ``mass_flow``'s integer shares and sums and the step's double
+    formula and per-round rounding. ``edges_cte`` is a SELECT yielding
+    (src, dst)."""
     d = damping
     parts = [
         f"WITH e AS (SELECT DISTINCT src, dst FROM ({edges_cte}))",
@@ -235,19 +308,22 @@ def pagerank_oracle_sql(
     ]
     for i in range(iters):
         prev, cur = f"r{i}", f"r{i + 1}"
+        units = _grid_units_sql(f"{prev}.rank", round_scale)
         parts.append(
-            f"c{i + 1} AS (SELECT e.dst AS node, sum({prev}.rank / deg.deg) AS contrib "
+            f"c{i + 1} AS (SELECT e.dst AS node, "
+            f"sum({_half_up_sql(units, 'deg.deg')})::BIGINT AS contrib "
             f"FROM e JOIN deg USING (src) JOIN {prev} ON {prev}.node = e.src "
             f"GROUP BY e.dst)"
         )
         parts.append(
-            f"d{i + 1} AS (SELECT coalesce(sum(rank), 0.0) AS dm FROM {prev} "
-            f"WHERE node NOT IN (SELECT src FROM deg))"
+            f"d{i + 1} AS (SELECT coalesce(sum({units}), 0)::BIGINT "
+            f"AS dm FROM {prev} WHERE node NOT IN (SELECT src FROM deg))"
         )
         parts.append(
             f"{cur} AS (SELECT nodes.node, "
-            f"round((1.0 - {d}) / n.n + {d} * (coalesce(c{i + 1}.contrib, 0.0) "
-            f"+ d{i + 1}.dm / n.n), {round_scale}) AS rank "
+            f"round((1.0 - {d}) / n.n + {d} * ("
+            f"{_as_mass_sql(f'coalesce(c{i + 1}.contrib, 0)')} "
+            f"+ {_as_mass_sql(f'd{i + 1}.dm')} / n.n), {round_scale}) AS rank "
             f"FROM nodes LEFT JOIN c{i + 1} ON c{i + 1}.node = nodes.node, "
             f"d{i + 1}, n)"
         )
@@ -281,9 +357,9 @@ def trustrank(
     concentrate on the seeds (mass returns to the trusted set, not
     uniformly). Seeds outside the graph's node set are ignored; the
     effective seed count normalizes the teleport. Everything else —
-    per-round rounding for engine-exactness, one edge join + one
+    integer link-mass sums and per-round rounding, one edge join + one
     dst-keyed aggregation per iteration, localCheckpoint lineage cuts,
-    (node, double) shuffle rows — is the T32 discipline unchanged. The
+    (node, long) shuffle rows — is the T32 discipline unchanged. The
     seed table is dimension-sized by definition (hand-vetted) and is
     broadcast; at 10^10 edges the per-iteration cost is identical to
     pagerank's.
@@ -291,7 +367,7 @@ def trustrank(
     ranks = mass_flow(
         *_link_flow(edges, src_col, dst_col, seeds, seed_col),
         {"rank": _trustrank_column(damping, round_scale)},
-        ("rank",),
+        {"rank": _grid_units(F.col("rank"), round_scale)},
         iters,
     )
     return ranks.select("node", "rank")
@@ -305,9 +381,10 @@ def trustrank_oracle_sql(
     round_scale: int = 10,
     final_scale: int = 8,
 ) -> str:
-    """The identical iteration unrolled as chained CTEs (T32 oracle
-    discipline). ``seeds_cte`` yields (node); seeds outside the graph
-    are dropped before normalization, exactly as the engine does."""
+    """The identical iteration unrolled as chained CTEs (the
+    ``pagerank_oracle_sql`` integer shares and sums). ``seeds_cte``
+    yields (node); seeds outside the graph are dropped before
+    normalization, exactly as the engine does."""
     d = damping
     t = "CASE WHEN m.is_seed THEN 1.0 / ns.ns ELSE 0.0 END"
     parts = [
@@ -324,20 +401,22 @@ def trustrank_oracle_sql(
     ]
     for i in range(iters):
         prev, cur = f"r{i}", f"r{i + 1}"
+        units = _grid_units_sql(f"{prev}.rank", round_scale)
         parts.append(
             f"c{i + 1} AS (SELECT e.dst AS node, "
-            f"sum({prev}.rank / deg.deg) AS contrib "
+            f"sum({_half_up_sql(units, 'deg.deg')})::BIGINT AS contrib "
             f"FROM e JOIN deg USING (src) JOIN {prev} ON {prev}.node = e.src "
             f"GROUP BY e.dst)"
         )
         parts.append(
-            f"d{i + 1} AS (SELECT coalesce(sum(rank), 0.0) AS dm FROM {prev} "
-            f"WHERE node NOT IN (SELECT src FROM deg))"
+            f"d{i + 1} AS (SELECT coalesce(sum({units}), 0)::BIGINT "
+            f"AS dm FROM {prev} WHERE node NOT IN (SELECT src FROM deg))"
         )
         parts.append(
             f"{cur} AS (SELECT m.node, "
-            f"round((1.0 - {d}) * {t} + {d} * (coalesce(c{i + 1}.contrib, 0.0) "
-            f"+ d{i + 1}.dm * {t}), {round_scale}) AS rank "
+            f"round((1.0 - {d}) * {t} + {d} * ("
+            f"{_as_mass_sql(f'coalesce(c{i + 1}.contrib, 0)')} "
+            f"+ {_as_mass_sql(f'd{i + 1}.dm')} * {t}), {round_scale}) AS rank "
             f"FROM m LEFT JOIN c{i + 1} ON c{i + 1}.node = m.node, "
             f"d{i + 1}, ns)"
         )
@@ -392,7 +471,7 @@ def spam_mass(
             "pr": _pagerank_column(damping, 10),
             "tr": _trustrank_column(damping, 10),
         },
-        ("pr", "tr"),
+        {c: _grid_units(F.col(c), 10) for c in ("pr", "tr")},
         iters,
     )
     j = state.select(
