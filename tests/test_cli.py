@@ -129,7 +129,7 @@ def test_cli_crawl_matches_simulator(spark, tmp_path, capsys):
             "--robots", rob_path,
             "--politeness", pol_path,
             "--rounds", "3",
-            "--seen-filter", "cuckoo",
+            "--seen-filter", "bloom",
             "-o", "-",
         ]
     )

@@ -100,12 +100,13 @@ def test_matches_pagerank_order_on_strong_graph(spark):
     assert order_o == order_p
 
 
-def test_duckdb_twin_bit_parity(spark):
+@pytest.mark.parametrize("iters", [4, 8])
+def test_duckdb_twin_bit_parity(spark, iters):
     edges = [(i % 11, (i * i + 1) % 13) for i in range(60)]
-    got = _run(spark, edges, iters=4)
+    got = _run(spark, edges, iters=iters)
     vals = ", ".join(f"({u}, {v})" for u, v in set(edges))
     sql = opic_oracle_sql(
-        f"SELECT * FROM (VALUES {vals}) t(src, dst)", iters=4
+        f"SELECT * FROM (VALUES {vals}) t(src, dst)", iters=iters
     )
     want = {
         r[0]: (r[1], r[2], r[3])

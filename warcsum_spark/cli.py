@@ -13,7 +13,7 @@ Flag parity (reference man pages → subcommands):
 * ``split``    — warcsumsplit.1: re-chunk an existing text manifest into
   ``-n`` parts with no digest cluster straddling a part.
 * ``crawl``    — the frontier scheduler (north_rule): seeds + link-graph →
-  per-round scheduled lists, optional bloom/cuckoo seen tier and
+  per-round scheduled lists, optional bloom seen tier and
   checkpointing.
 * ``cdx``      — no reference counterpart (the C suite stops at the
   manifest): the SURT-keyed CDX lookup index over exactly the records
@@ -169,9 +169,6 @@ def _cmd_crawl(args: argparse.Namespace) -> int:
     store = (
         ParquetDirectoryStore(spark, args.checkpoint) if args.checkpoint else None
     )
-    use_bloom: bool | str = {"exact": False, "bloom": True, "cuckoo": "cuckoo"}[
-        args.seen_filter
-    ]
     rounds = run_crawl(
         spark,
         store,
@@ -183,7 +180,7 @@ def _cmd_crawl(args: argparse.Namespace) -> int:
         blocklist=blocklist,
         block_patterns=tuple(args.block_pattern or ()),
         default_budget=args.budget,
-        use_bloom=use_bloom,
+        use_bloom=args.seen_filter == "bloom",
         salt_buckets=args.salt_buckets,
     )
     summary = []
@@ -290,7 +287,7 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--rounds", type=int, default=1)
     sp.add_argument("--budget", type=int, default=2)
     sp.add_argument(
-        "--seen-filter", choices=["exact", "bloom", "cuckoo"], default="exact"
+        "--seen-filter", choices=["exact", "bloom"], default="exact"
     )
     sp.add_argument("--salt-buckets", type=int, default=0)
     sp.add_argument("--checkpoint", default=None)

@@ -5,21 +5,20 @@ Two-tier design (SURVEY §2.11):
 * **Exact tier**: ``left_anti`` join candidates ⋈ seen — zero false
   positives/negatives; this alone is correct but shuffles the full seen
   table.
-* **Filter tier** (bloom here, cuckoo in frontier/cuckoo.py): the seen set
-  is hash-partitioned by ``pmod(xxhash64(url), n)`` and each partition is
-  summarized into one filter blob. Candidates are co-grouped with their
-  partition's blob; "definitely not seen" candidates skip the exact join,
-  only "maybe seen" ones (true seen + fp-rate of the new) pay it. False
-  positives are resolved by the exact tier, so the combined gate has
-  **zero false negatives and zero false positives**. The tier trims only
-  the candidate side of the exact anti-join (by ~(1-fpp) for genuinely-new
+* **Filter tier** (bloom): the seen set is hash-partitioned by
+  ``pmod(xxhash64(url), n)`` and each partition is summarized into one
+  bloom blob. Candidates are co-grouped with their partition's blob;
+  "definitely not seen" candidates skip the exact join, only "maybe
+  seen" ones (true seen + fp-rate of the new) pay it. False positives
+  are resolved by the exact tier, so the combined gate has **zero false
+  negatives and zero false positives**. The tier trims only the
+  candidate side of the exact anti-join (by ~(1-fpp) for genuinely-new
   URLs): the confirmation still shuffles the whole seen table.
 
-One runner builds the blobs of every filter kind (``_build_blobs``) and
-one runs the two-tier gate (``_gate``); a kind supplies only its blob
-encoder ``encode(h64) -> bytes`` and its membership test
-``contains(blob, n_keys, h64) -> bool array``. The bloom blob is a numpy
-bitset, k hashes derived from xxhash64 via double hashing.
+The bloom blob is a numpy bitset, k hashes derived from xxhash64 via
+double hashing. Bloom is the one filter kind: the set a frontier round
+summarizes (``seen ∪ pending``) only grows, so a filter that can also
+delete keys would buy nothing here.
 
 Blobs are plain binary rows ``url_seen(partition_id int, n_keys long,
 n_partitions int, filter_blob binary)`` — checkpointable to
@@ -87,8 +86,8 @@ def _remix(h64: np.ndarray) -> np.ndarray:
     """MurmurHash3's 64-bit finalizer over the partition's keys. Routing
     takes ``pmod(xxhash64(url), n)``, so within one partition the low bits
     of xxhash64 are fixed; a filter indexed by them uses a fraction of its
-    table (bloom fpp ~9% instead of 1% at n=16, cuckoo overflow at 0.6
-    load). After the remix every bit depends on the whole hash."""
+    table (bloom fpp ~9% instead of 1% at n=16). After the remix every bit
+    depends on the whole hash."""
     h = h64 ^ (h64 >> np.uint64(33))
     h = h * np.uint64(0xFF51AFD7ED558CCD)
     h ^= h >> np.uint64(33)
@@ -113,32 +112,6 @@ def anti_join_urls(candidates: DataFrame, seen: DataFrame) -> DataFrame:
     ).drop("_ah")
 
 
-def _build_blobs(
-    seen: DataFrame, n_partitions: int, encode: Callable[[np.ndarray], bytes]
-) -> DataFrame:
-    """seen(url) → url_seen blobs, one per hash-partition; ``encode`` turns
-    the partition's remixed xxhash64 keys (uint64) into its filter blob."""
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        h = _remix(pdf["h64"].to_numpy(dtype=np.int64).view(np.uint64))
-        return pd.DataFrame(
-            {
-                "partition_id": [int(pdf["partition_id"].iloc[0])],
-                "n_keys": [len(h)],
-                "n_partitions": [n_partitions],
-                "filter_blob": [encode(h)],
-            }
-        )
-
-    return (
-        seen.select(
-            partition_id(n_partitions).alias("partition_id"), _h64_col().alias("h64")
-        )
-        .groupBy("partition_id")
-        .applyInPandas(build, schema=BLOB_SCHEMA)
-    )
-
-
 def _gate(
     candidates: DataFrame,
     seen: DataFrame,
@@ -148,6 +121,8 @@ def _gate(
 ) -> DataFrame:
     """The two-tier gate: ``candidates ∖ seen``, exact, with only the rows
     ``contains`` calls maybe-seen reaching the exact anti-join.
+    ``filter_unseen`` passes ``_bloom_contains``; the parameter lets a
+    test count the rows tested.
 
     The tested frame feeds both the definitely-new and the maybe-seen
     branch; a lazy local checkpoint makes the cogroup (and everything
@@ -194,8 +169,27 @@ def build_seen_filters(
     seen: DataFrame, n_partitions: int = 64, fpp: float = 0.01
 ) -> DataFrame:
     """seen(url) → url_seen bloom blobs (partition_id, n_keys,
-    n_partitions, filter_blob)."""
-    return _build_blobs(seen, n_partitions, lambda h: _bloom_encode(h, fpp))
+    n_partitions, filter_blob), one per hash-partition, each built over
+    the partition's remixed xxhash64 keys."""
+
+    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+        h = _remix(pdf["h64"].to_numpy(dtype=np.int64).view(np.uint64))
+        return pd.DataFrame(
+            {
+                "partition_id": [int(pdf["partition_id"].iloc[0])],
+                "n_keys": [len(h)],
+                "n_partitions": [n_partitions],
+                "filter_blob": [_bloom_encode(h, fpp)],
+            }
+        )
+
+    return (
+        seen.select(
+            partition_id(n_partitions).alias("partition_id"), _h64_col().alias("h64")
+        )
+        .groupBy("partition_id")
+        .applyInPandas(build, schema=BLOB_SCHEMA)
+    )
 
 
 def filter_unseen(

@@ -10,7 +10,7 @@ pending holds one row per URL). Invariant: ``pending ∩ seen = ∅`` —
 ``init_frontier`` starts with an empty seen set, and every round adds to
 seen only scheduled URLs (which leave pending) and adds to pending only
 URLs in neither set. So pending needs no seen gate, seen' needs no
-distinct, and the URL-seen gate (exact, or with the bloom/cuckoo tier of
+distinct, and the URL-seen gate (exact, or with the bloom tier of
 frontier/seen.py) runs once, on the discoveries, where it filters:
 ``seen' ∪ pending = seen ∪ pending`` because ``scheduled ⊆ pending``.
 Everything is DataFrame ops; the only Python is the canonicalizer UDF
@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from warcsum_spark.frontier.cuckoo import build_seen_cuckoo, filter_unseen_cuckoo
 from warcsum_spark.frontier.politeness import schedule_per_host
 from warcsum_spark.frontier.robots import robots_allowed
 from warcsum_spark.frontier.seen import anti_join_urls, build_seen_filters, filter_unseen
@@ -52,8 +51,8 @@ SEEN_SCHEMA = T.StructType([T.StructField("url", T.StringType(), False)])
 # a discovered URL's priority is its best parent's times this (oracle's
 # simulate_crawl default)
 DEPTH_DECAY = 0.5
-# hash partitions of the seen ∪ pending set the bloom/cuckoo tier builds
-# one blob each for
+# hash partitions of the seen ∪ pending set the bloom tier builds one
+# blob each for
 BLOOM_PARTITIONS = 16
 
 
@@ -100,7 +99,7 @@ def frontier_round(
     traps: DataFrame | None = None,  # detect_traps() output
     trap_keep: int | None = None,  # None = drop trapped hosts entirely
     default_budget: int = 2,
-    use_bloom: bool | str = False,  # False | True (bloom) | "cuckoo"
+    use_bloom: bool = False,
     salt_buckets: int = 0,
 ) -> tuple[FrontierState, DataFrame]:
     """Run one superstep; returns (new_state, scheduled).
@@ -109,8 +108,8 @@ def frontier_round(
     deterministic crawl order for the round is (host ASC, host_rank ASC).
 
     ``state`` must satisfy ``pending ∩ seen = ∅`` (module docstring); the
-    returned state does too. ``use_bloom`` (False = exact | True = bloom |
-    "cuckoo") picks the filter tier of the discovery gate.
+    returned state does too. ``use_bloom`` puts the bloom tier in front
+    of the discovery gate's exact anti-join.
 
     Every round truncates lineage (localCheckpoint of the schedule and of
     the new state): an iterative job whose state stays lazy re-executes
@@ -179,13 +178,10 @@ def frontier_round(
     # ∖ seen' ∖ pending = ∖ (seen ∪ pending), a disjoint union by the
     # invariant (a URL already pending keeps its original priority)
     known = state.seen.unionByName(pending.select("url"))
-    build, gate = (
-        (build_seen_cuckoo, filter_unseen_cuckoo)
-        if use_bloom == "cuckoo"
-        else (build_seen_filters, filter_unseen)
+    filters = (
+        build_seen_filters(known, n_partitions=BLOOM_PARTITIONS) if use_bloom else None
     )
-    filters = build(known, n_partitions=BLOOM_PARTITIONS) if use_bloom else None
-    discoveries = gate(discoveries, known, filters, BLOOM_PARTITIONS)
+    discoveries = filter_unseen(discoveries, known, filters, BLOOM_PARTITIONS)
     discoveries = discoveries.withColumn(
         "host", url_host_canonical(F.col("url"))
     ).select([f.name for f in FRONTIER_SCHEMA.fields])

@@ -130,26 +130,28 @@ def opic_oracle_sql(
     """The same rounds as chained CTEs for DuckDB, in the same BIGINT
     fixed point as ``opic`` (integer ``//`` for Spark's ``div``, sums
     cast back to BIGINT), so the oracle is exact. ``edges_cte`` is a
-    SELECT yielding (src, dst)."""
+    SELECT yielding (src, dst). Every CTE is MATERIALIZED: DuckDB inlines
+    CTEs, and each round reads the previous one three times."""
     scale, g = _check_round_scale(round_scale)
     parts = [
-        f"WITH e AS (SELECT DISTINCT src, dst FROM ({edges_cte}))",
-        "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)",
-        "n AS (SELECT count(*) AS n FROM nodes)",
-        "deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src)",
-        f"s0 AS (SELECT node, {_half_up_sql(scale, 'n.n')} AS cash,"
+        f"WITH e AS MATERIALIZED (SELECT DISTINCT src, dst FROM ({edges_cte}))",
+        "nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e)",
+        "n AS MATERIALIZED (SELECT count(*) AS n FROM nodes)",
+        "deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM e GROUP BY src)",
+        f"s0 AS MATERIALIZED (SELECT node, {_half_up_sql(scale, 'n.n')} AS cash,"
         f" 0::BIGINT AS hist FROM nodes, n)",
     ]
     for i in range(iters):
         prev, cur = f"s{i}", f"s{i + 1}"
         parts.append(
-            f"c{i + 1} AS (SELECT e.dst AS node,"
+            f"c{i + 1} AS MATERIALIZED (SELECT e.dst AS node,"
             f" sum({_half_up_sql(f'{prev}.cash * {g}', 'deg.deg')})::BIGINT"
             f" AS contrib FROM e JOIN deg USING (src)"
             f" JOIN {prev} ON {prev}.node = e.src GROUP BY e.dst)"
         )
         parts.append(
-            f"d{i + 1} AS (SELECT coalesce(sum(cash * {g}), 0)::BIGINT AS dm"
+            f"d{i + 1} AS MATERIALIZED"
+            f" (SELECT coalesce(sum(cash * {g}), 0)::BIGINT AS dm"
             f" FROM {prev} WHERE node NOT IN (SELECT src FROM deg))"
         )
         cash = _half_up_sql(
@@ -158,7 +160,7 @@ def opic_oracle_sql(
             g,
         )
         parts.append(
-            f"{cur} AS (SELECT {prev}.node, {cash} AS cash,"
+            f"{cur} AS MATERIALIZED (SELECT {prev}.node, {cash} AS cash,"
             f" {prev}.hist + {prev}.cash AS hist"
             f" FROM {prev} LEFT JOIN c{i + 1}"
             f" ON c{i + 1}.node = {prev}.node, d{i + 1}, n)"

@@ -297,31 +297,37 @@ def pagerank_oracle_sql(
     (contrib, dangling, rank) group per unrolled iteration, with
     ``mass_flow``'s integer shares and sums and the step's double
     formula and per-round rounding. ``edges_cte`` is a SELECT yielding
-    (src, dst)."""
+    (src, dst).
+
+    Every CTE is MATERIALIZED: each round's rank is read three times by
+    the next round, and DuckDB inlines CTEs, so an inlined query would grow
+    about 8× per round. The teleport is the engine's double ``1.0 - d``
+    (not DuckDB's exact DECIMAL ``1.0 - d``)."""
     d = damping
     parts = [
-        f"WITH e AS (SELECT DISTINCT src, dst FROM ({edges_cte}))",
-        "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)",
-        "n AS (SELECT count(*) AS n FROM nodes)",
-        "deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src)",
-        f"r0 AS (SELECT node, round(1.0 / n.n, {round_scale}) AS rank FROM nodes, n)",
+        f"WITH e AS MATERIALIZED (SELECT DISTINCT src, dst FROM ({edges_cte}))",
+        "nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e)",
+        "n AS MATERIALIZED (SELECT count(*) AS n FROM nodes)",
+        "deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM e GROUP BY src)",
+        f"r0 AS MATERIALIZED (SELECT node, round(1.0 / n.n, {round_scale}) "
+        "AS rank FROM nodes, n)",
     ]
     for i in range(iters):
         prev, cur = f"r{i}", f"r{i + 1}"
         units = _grid_units_sql(f"{prev}.rank", round_scale)
         parts.append(
-            f"c{i + 1} AS (SELECT e.dst AS node, "
+            f"c{i + 1} AS MATERIALIZED (SELECT e.dst AS node, "
             f"sum({_half_up_sql(units, 'deg.deg')})::BIGINT AS contrib "
             f"FROM e JOIN deg USING (src) JOIN {prev} ON {prev}.node = e.src "
             f"GROUP BY e.dst)"
         )
         parts.append(
-            f"d{i + 1} AS (SELECT coalesce(sum({units}), 0)::BIGINT "
+            f"d{i + 1} AS MATERIALIZED (SELECT coalesce(sum({units}), 0)::BIGINT "
             f"AS dm FROM {prev} WHERE node NOT IN (SELECT src FROM deg))"
         )
         parts.append(
-            f"{cur} AS (SELECT nodes.node, "
-            f"round((1.0 - {d}) / n.n + {d} * ("
+            f"{cur} AS MATERIALIZED (SELECT nodes.node, "
+            f"round({1.0 - d!r}::DOUBLE / n.n + {d} * ("
             f"{_as_mass_sql(f'coalesce(c{i + 1}.contrib, 0)')} "
             f"+ {_as_mass_sql(f'd{i + 1}.dm')} / n.n), {round_scale}) AS rank "
             f"FROM nodes LEFT JOIN c{i + 1} ON c{i + 1}.node = nodes.node, "
@@ -384,37 +390,38 @@ def trustrank_oracle_sql(
     """The identical iteration unrolled as chained CTEs (the
     ``pagerank_oracle_sql`` integer shares and sums). ``seeds_cte``
     yields (node); seeds outside the graph are dropped before
-    normalization, exactly as the engine does."""
+    normalization, exactly as the engine does. CTEs are MATERIALIZED and
+    the teleport is a double, as in ``pagerank_oracle_sql``."""
     d = damping
     t = "CASE WHEN m.is_seed THEN 1.0 / ns.ns ELSE 0.0 END"
     parts = [
-        f"WITH e AS (SELECT DISTINCT src, dst FROM ({edges_cte}))",
-        "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)",
-        f"s AS (SELECT DISTINCT node FROM ({seeds_cte}) "
+        f"WITH e AS MATERIALIZED (SELECT DISTINCT src, dst FROM ({edges_cte}))",
+        "nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e)",
+        f"s AS MATERIALIZED (SELECT DISTINCT node FROM ({seeds_cte}) "
         "WHERE node IN (SELECT node FROM nodes))",
-        "m AS (SELECT nodes.node, nodes.node IN (SELECT node FROM s) "
-        "AS is_seed FROM nodes)",
-        "ns AS (SELECT count(*) AS ns FROM s)",
-        "deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src)",
-        f"r0 AS (SELECT m.node, round({t}, {round_scale}) AS rank "
+        "m AS MATERIALIZED (SELECT nodes.node, "
+        "nodes.node IN (SELECT node FROM s) AS is_seed FROM nodes)",
+        "ns AS MATERIALIZED (SELECT count(*) AS ns FROM s)",
+        "deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM e GROUP BY src)",
+        f"r0 AS MATERIALIZED (SELECT m.node, round({t}, {round_scale}) AS rank "
         "FROM m, ns)",
     ]
     for i in range(iters):
         prev, cur = f"r{i}", f"r{i + 1}"
         units = _grid_units_sql(f"{prev}.rank", round_scale)
         parts.append(
-            f"c{i + 1} AS (SELECT e.dst AS node, "
+            f"c{i + 1} AS MATERIALIZED (SELECT e.dst AS node, "
             f"sum({_half_up_sql(units, 'deg.deg')})::BIGINT AS contrib "
             f"FROM e JOIN deg USING (src) JOIN {prev} ON {prev}.node = e.src "
             f"GROUP BY e.dst)"
         )
         parts.append(
-            f"d{i + 1} AS (SELECT coalesce(sum({units}), 0)::BIGINT "
+            f"d{i + 1} AS MATERIALIZED (SELECT coalesce(sum({units}), 0)::BIGINT "
             f"AS dm FROM {prev} WHERE node NOT IN (SELECT src FROM deg))"
         )
         parts.append(
-            f"{cur} AS (SELECT m.node, "
-            f"round((1.0 - {d}) * {t} + {d} * ("
+            f"{cur} AS MATERIALIZED (SELECT m.node, "
+            f"round({1.0 - d!r}::DOUBLE * {t} + {d} * ("
             f"{_as_mass_sql(f'coalesce(c{i + 1}.contrib, 0)')} "
             f"+ {_as_mass_sql(f'd{i + 1}.dm')} * {t}), {round_scale}) AS rank "
             f"FROM m LEFT JOIN c{i + 1} ON c{i + 1}.node = m.node, "
