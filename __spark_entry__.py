@@ -127,7 +127,7 @@ def q_doc_dedup_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents: ext / copy_no / refersto within truncated-digest clusters."""
     from warcsum_spark.operators.collres import resolve_collisions
 
-    ext = resolve_collisions(_doc_manifest(spark, sf_dir), content_key="payload")
+    ext = resolve_collisions(_doc_manifest(spark, sf_dir))
     return ext.select(
         F.col("offset").alias("doc_id"),
         "digest",

@@ -65,6 +65,22 @@ def test_cli_manifest_append_keeps_both_runs(spark, tmp_path):
     assert sorted(got) == sorted(expect * 2)
 
 
+def _assert_split_keeps_clusters_whole(out, expect):
+    """The part files under ``out`` together hold ``expect``, no digest
+    (field 6) appears in two part files, and more than one part is used."""
+    lines_per_part = []
+    for part in sorted(glob.glob(os.path.join(out, "part-*"))):
+        with open(part, encoding="utf-8") as f:
+            lines_per_part.append([l for l in f.read().splitlines() if l])
+    assert sorted(l for lines in lines_per_part for l in lines) == sorted(expect)
+    owner: dict[str, int] = {}
+    for i, lines in enumerate(lines_per_part):
+        for line in lines:
+            digest = line.split(" ")[5]
+            assert owner.setdefault(digest, i) == i, f"{digest} in two parts"
+    assert len(set(owner.values())) > 1  # the split really splits
+
+
 def test_cli_split_to_dir_keeps_clusters_whole(spark, tmp_path):
     """split -n 3 -o DIR (warcsumsplit.1): the part files together hold
     the manifest, and no digest appears in two part files."""
@@ -73,20 +89,32 @@ def test_cli_split_to_dir_keeps_clusters_whole(spark, tmp_path):
     assert main(["manifest", d, "-H", "sha1", "-o", manifest_dir]) == 0
     out = str(tmp_path / "split_out")
     assert main(["split", manifest_dir, "-n", "3", "-o", out]) == 0
-    parts = sorted(glob.glob(os.path.join(out, "part-*")))
-    lines_per_part = []
-    for part in parts:
-        with open(part, encoding="utf-8") as f:
-            lines_per_part.append([l for l in f.read().splitlines() if l])
     paths = sorted(glob.glob(os.path.join(d, "**", "*.warc.gz"), recursive=True))
-    expect = manifest_lines(oracle_manifest(paths, algo="sha1"))
-    assert sorted(l for lines in lines_per_part for l in lines) == sorted(expect)
-    owner: dict[str, int] = {}
-    for i, lines in enumerate(lines_per_part):
-        for line in lines:
-            digest = line.split(" ")[5]
-            assert owner.setdefault(digest, i) == i, f"{digest} in two parts"
-    assert len(set(owner.values())) > 1  # the split really splits
+    _assert_split_keeps_clusters_whole(out, manifest_lines(oracle_manifest(paths, algo="sha1")))
+
+
+def test_cli_dedup_to_dir_splits_with_one_exchange(spark, tmp_path, monkeypatch):
+    """dedup -n 3 -o DIR: the part files together hold the oracle's
+    extended manifest, no digest appears in two part files, and the
+    pipeline's own digest exchange makes the split (no second shuffle)."""
+    import warcsum_spark.cli as cli
+
+    plans = []
+    emit = cli._emit_text
+
+    def _record(df_text, output, mode="overwrite"):
+        plans.append(df_text._jdf.queryExecution().executedPlan().toString())
+        emit(df_text, output, mode)
+
+    monkeypatch.setattr(cli, "_emit_text", _record)
+    d = _archives(tmp_path)
+    out = str(tmp_path / "dedup_out")
+    assert main(["dedup", d, "-H", "sha1", "-n", "3", "-o", out]) == 0
+    paths = sorted(glob.glob(os.path.join(d, "**", "*.warc.gz"), recursive=True))
+    expect = extended_lines(oracle_extended(oracle_manifest(paths, algo="sha1")))
+    _assert_split_keeps_clusters_whole(out, expect)
+    (plan,) = plans
+    assert plan.count("Exchange hashpartitioning") == 1, plan[:3000]
 
 
 def _crawl_inputs(spark, tmp_path):

@@ -1,11 +1,9 @@
 """Stages 3+4 parity: ext / copy_no / refersto vs oracle, including
-manufactured digest collisions and both content-key modes."""
+manufactured digest collisions and subgroups interleaved across files."""
 
 from __future__ import annotations
 
 import glob
-
-import pytest
 
 from warcsum_spark.operators.collres import extended_text, resolve_collisions
 from warcsum_spark.operators.stats import run_stats
@@ -27,10 +25,9 @@ def oracle_ext_lines(warc_dir, truncate_digest=None):
     return sorted(extended_lines(oracle_extended(rows))), rows
 
 
-@pytest.mark.parametrize("content_key", ["payload", "fingerprint"])
-def test_extended_manifest_matches_oracle(spark, warc_dir, content_key):
+def test_extended_manifest_matches_oracle(spark, warc_dir):
     expected, _ = oracle_ext_lines(warc_dir)
-    df = warcsum_pipeline(spark, warc_dir, content_key=content_key)
+    df = warcsum_pipeline(spark, warc_dir)
     got = sorted(r["line"] for r in extended_text(df).collect())
     assert got == expected
 
@@ -70,7 +67,6 @@ def test_partitioning_invariance(spark, warc_dir):
     order — the reference's sort-order grouping is fully replaced)."""
     expected, _ = oracle_ext_lines(warc_dir)
     for n in (1, 7):
-        df = warcsum_pipeline(spark, warc_dir)
         from warcsum_spark.operators.digest_manifest import digest_manifest
         from warcsum_spark.sources.warc import scan_warc_members
 
@@ -79,3 +75,34 @@ def test_partitioning_invariance(spark, warc_dir):
         ext = resolve_collisions(manifest, num_partitions=n)
         got = sorted(r["line"] for r in extended_text(ext).collect())
         assert got == expected
+
+
+def test_interleaved_subgroups_across_files(spark):
+    """One digest, three payloads interleaved over two warcfiles, given to
+    Spark in reverse order over 3 partitions: ext follows each payload's
+    first (warcfile, offset), copy_no and refersto follow (warcfile,
+    offset) order across files, exactly as the oracle visits them."""
+    spec = [("a", 0, b"A"), ("a", 5, b"B"), ("b", 0, b"A"), ("b", 3, b"C"), ("b", 9, b"B")]
+    rows = [
+        {
+            "warcfile": f"{f}.warc.gz",
+            "offset": off,
+            "length": len(payload),
+            "uri": f"http://h/{f}{off}",
+            "date": f"2015-01-0{i + 1}",
+            "digest": "sha1:00",
+            "payload": payload,
+        }
+        for i, (f, off, payload) in enumerate(spec)
+    ]
+    cols = ["warcfile", "offset", "length", "uri", "date", "digest", "payload"]
+    manifest = spark.createDataFrame(
+        [tuple(r[c] for c in cols) for r in reversed(rows)],
+        "warcfile string, offset long, length long, uri string, date string, "
+        "digest string, payload binary",
+    ).repartition(3)
+    got = sorted(r["line"] for r in extended_text(resolve_collisions(manifest)).collect())
+    assert got == sorted(extended_lines(oracle_extended(rows)))
+    # A@b:0 is copy 2 of ext 1 and refers to a:0; C is the third subgroup
+    assert "b.warc.gz 0 1 http://h/b0 2015-01-03 sha1:00 1 2 http://h/a0 2015-01-01" in got
+    assert "b.warc.gz 3 1 http://h/b3 2015-01-04 sha1:00 3 1 - -" in got

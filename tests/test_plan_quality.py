@@ -27,11 +27,13 @@ def _manifest(spark, n=200):
 
 
 def test_collres_single_exchange(spark):
-    """All three dedup windows must share ONE hash exchange on digest —
-    the whole 4-stage pipeline's only wide boundary (SURVEY §3.3)."""
+    """Both dedup window specs must share ONE hash exchange on digest —
+    the whole 4-stage pipeline's only wide boundary (SURVEY §3.3) — and
+    add exactly one sort and one window operator each."""
     plan = _plan(resolve_collisions(_manifest(spark)))
-    n_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_exchanges == 1, f"expected 1 exchange, plan has {n_exchanges}:\n{plan[:3000]}"
+    for node, want in (("Exchange hashpartitioning", 1), ("Window [", 2), ("Sort [", 2)):
+        n = plan.count(node)
+        assert n == want, f"expected {want} {node!r}, plan has {n}:\n{plan[:3000]}"
 
 
 def test_parquet_filter_pushdown(spark, sf_dir):

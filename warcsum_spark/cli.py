@@ -6,10 +6,9 @@ Flag parity (reference man pages → subcommands):
   ``-f/--force`` (recompute even when a stored digest matches),
   ``-s/--skip-empty``, ``-a/--append``, ``-o/--output``.
 * ``dedup``    — the fused pipeline (warcsum | sort | warcsumsplit |
-  warccollres --proc | warcsumproc): adds ``--fingerprint`` (compare
-  (length, sha256) instead of raw payload bytes — warccollres.1's
-  ``--memory-only`` analogue for 100 TB runs) and ``-n`` chunked output
-  (warcsumsplit.1's cluster-preserving split).
+  warccollres --proc | warcsumproc): adds ``-n`` chunked output
+  (warcsumsplit.1's cluster-preserving split, made by the pipeline's own
+  digest exchange).
 * ``split``    — warcsumsplit.1: re-chunk an existing text manifest into
   ``-n`` parts with no digest cluster straddling a part.
 * ``crawl``    — the frontier scheduler (north_rule): seeds + link-graph →
@@ -77,11 +76,10 @@ def _cmd_dedup(args: argparse.Namespace) -> int:
         algo=args.hash,
         force=args.force,
         skip_empty=args.skip_empty,
-        content_key="fingerprint" if args.fingerprint else "payload",
+        # cluster-preserving split (warcsumsplit.1): the pipeline's one
+        # hash exchange on digest makes the N parts
+        num_partitions=args.num_chunks or None,
     )
-    if args.num_chunks:
-        # cluster-preserving split (warcsumsplit.1): hash partition on digest
-        ext = ext.repartition(args.num_chunks, "digest")
     _emit_text(extended_text(ext), args.output)
     return 0
 
@@ -246,10 +244,6 @@ def build_parser() -> argparse.ArgumentParser:
 
     sp = add_parser("dedup", help="full pipeline: extended manifest")
     add_warcsum_flags(sp)
-    sp.add_argument(
-        "--fingerprint", action="store_true",
-        help="compare (length, sha256) instead of payload bytes",
-    )
     sp.add_argument("-n", "--num-chunks", type=int, default=0)
     sp.set_defaults(fn=_cmd_dedup)
 

@@ -8,26 +8,26 @@ copies within each (digest, ext) subgroup (warcsumproc:37–53).
 
 Spark re-expression (SURVEY §2.5 A2/A3, §2.6 W1–W3): the implicit
 sort-order grouping becomes explicit keys, and the whole per-cluster state
-machine collapses into three window functions over ONE exchange:
+machine collapses into two window specs over ONE exchange. The content key
+is the exact payload bytes, which the reference byte-compares:
 
-* content key ``ckey`` — exact payload bytes (default; reference semantics)
-  or a (length, sha256) fingerprint for 100 TB runs where shuffling payload
-  bytes is the bottleneck (probabilistically exact; digest+sha256+length
-  must all collide to mis-group).
-* ``ext``  = dense_rank of the subgroup's first-seen position within the
-  digest cluster (W1, warccollres.c:202–205).
-* ``copy_no`` = row_number within (digest, ckey) in input order (W2).
-* ``refersto_uri/date`` = FIRST copy's uri/date for copies > 1, NULL for
+* window ``(digest, payload)`` ordered by (warcfile, offset) gives
+  ``copy_no`` = row_number within the subgroup in input order (W2) and
+  ``_first`` = the subgroup's first row (warcfile, offset, uri, date).
+* ``ext`` = dense_rank of ``_first``'s (warcfile, offset) within the digest
+  cluster, i.e. the subgroup's first-seen ordinal (W1,
+  warccollres.c:202–205).
+* ``refersto_uri/date`` = ``_first``'s uri/date for copies > 1, NULL for
   copy 1 (W3) — the documented warcsumproc semantics; we deliberately do
   not reproduce warccollres.c:221–231's current-record bug, nor
   warcsumproc:37's ``&&``-for-``||`` cluster-break bug (SURVEY §2.6).
 
-Physical plan: one ``repartition(digest)`` exchange; all three windows'
+Physical plan: one ``repartition(digest)`` exchange; both windows'
 ClusteredDistribution requirements are satisfied by it (their keys extend
-``digest``), so they add only sorts — no second shuffle. Singleton clusters
-(the common case; reference optimization X4 lazily avoided downloading
-them, warccollres.c:1047–1053) cost one sort row each and never touch a
-Python worker: the entire stage is JVM-side whole-stage-codegen'd.
+``digest``), so they add only a sort each — no second shuffle. Singleton
+clusters (the common case; reference optimization X4 lazily avoided
+downloading them, warccollres.c:1047–1053) cost one sort row each and never
+touch a Python worker: the entire stage is JVM-side whole-stage-codegen'd.
 """
 
 from __future__ import annotations
@@ -50,56 +50,38 @@ EXTENDED_COLS = [
 
 
 def resolve_collisions(
-    manifest: DataFrame,
-    content_key: str = "payload",
-    num_partitions: int | None = None,
+    manifest: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
     """Manifest (with ``payload`` column) → extended manifest.
 
-    content_key='payload'      exact byte equality (oracle/reference parity)
-    content_key='fingerprint'  (length, sha256) — avoids shuffling payloads
+    Subgroups are exact payload byte equality (oracle/reference parity).
     Input order within a cluster is (warcfile, offset), matching the
-    reference's file/offset visit order.
+    reference's file/offset visit order. ``num_partitions`` sets the
+    exchange's partition count (default: the session's).
     """
-    if content_key == "payload":
-        ckey = F.col("payload")
-    elif content_key == "fingerprint":
-        ckey = F.struct(
-            F.length("payload").alias("plen"), F.sha2(F.col("payload"), 256).alias("psha")
-        )
-    else:
-        raise ValueError("content_key must be 'payload' or 'fingerprint'")
-
-    # never shuffle the bytes in fingerprint mode
-    cols = [c for c in manifest.columns if c != "payload" or content_key == "payload"]
-    df = manifest.select(*cols, ckey.alias("_ckey"))
-    # single exchange for all three windows (their ClusteredDistribution
-    # requirements extend "digest", so hash(digest) satisfies every one)
+    # single exchange for both windows (their ClusteredDistribution
+    # requirements extend "digest", so hash(digest) satisfies each one)
     if num_partitions:
-        df = df.repartition(num_partitions, "digest")
+        df = manifest.repartition(num_partitions, "digest")
     else:
-        df = df.repartition("digest")
+        df = manifest.repartition("digest")
 
     # two selects, not one withColumn per column: each DataFrame call
-    # re-analyzes the whole plan on the driver. ``ext`` ranks
-    # ``_grp_first``, a window result, so it needs the second select.
-    ord_cols = [F.col("warcfile"), F.col("offset")]
-    w_grp = Window.partitionBy("digest", "_ckey").orderBy(*ord_cols)
+    # re-analyzes the whole plan on the driver. ``ext`` ranks ``_first``,
+    # a window result, so it needs the second select.
+    w = Window.partitionBy("digest", "payload").orderBy("warcfile", "offset")
     df = df.select(
         "*",
-        # first-seen position of this row's content subgroup within the cluster
-        F.min(F.struct(*ord_cols))
-        .over(Window.partitionBy("digest", "_ckey"))
-        .alias("_grp_first"),
-        F.row_number().over(w_grp).alias("copy_no"),
-        F.first("uri").over(w_grp).alias("_first_uri"),
-        F.first("date").over(w_grp).alias("_first_date"),
+        F.row_number().over(w).alias("copy_no"),
+        F.first(F.struct("warcfile", "offset", "uri", "date")).over(w).alias("_first"),
     )
     later = F.col("copy_no") > 1
     derived = {
-        "ext": F.dense_rank().over(Window.partitionBy("digest").orderBy("_grp_first")),
-        "refersto_uri": F.when(later, F.col("_first_uri")),
-        "refersto_date": F.when(later, F.col("_first_date")),
+        "ext": F.dense_rank().over(
+            Window.partitionBy("digest").orderBy("_first.warcfile", "_first.offset")
+        ),
+        "refersto_uri": F.when(later, F.col("_first.uri")),
+        "refersto_date": F.when(later, F.col("_first.date")),
     }
     return df.select(
         *(derived[c].alias(c) if c in derived else F.col(c) for c in EXTENDED_COLS)

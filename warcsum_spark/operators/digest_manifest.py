@@ -31,7 +31,8 @@ def digest_manifest(
     ``keep_payload`` carries the payload column through for the downstream
     collision-resolution stage (our substitute for the reference's HTTP
     range re-fetch, warccollres.c:663–781); export paths drop it via
-    ``MANIFEST_COLS`` and Catalyst prunes it from the scan.
+    ``MANIFEST_COLS``. The scan still emits it either way: the digest
+    expression reads ``payload``.
     """
     if algo not in SUPPORTED_ALGOS:
         raise ValueError(f"unsupported algo {algo!r}")

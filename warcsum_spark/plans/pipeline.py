@@ -21,15 +21,17 @@ def warcsum_pipeline(
     algo: str = "sha1",
     force: bool = True,
     skip_empty: bool = False,
-    content_key: str = "payload",
+    num_partitions: int | None = None,
 ) -> DataFrame:
     """.warc.gz files → extended manifest (ext, copy_no, refersto_*).
 
     Equivalent to: warcsum | sort -k6 | warcsumsplit | warccollres --proc
     (all four reference stages), minus the sort (grouping is hash-based).
+    ``num_partitions`` sets the partition count of the one digest exchange,
+    so the output is already a cluster-preserving split (warcsumsplit).
     """
     members = scan_warc_members(spark, warc_paths)
     manifest = digest_manifest(
         members, algo=algo, force=force, skip_empty=skip_empty, keep_payload=True
     )
-    return resolve_collisions(manifest, content_key=content_key)
+    return resolve_collisions(manifest, num_partitions=num_partitions)
